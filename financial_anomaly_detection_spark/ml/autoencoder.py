@@ -23,9 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .iforest import IsolationForestModel
-
-_as_array = IsolationForestModel._as_array
+from .sampling import as_array, collect_sample
 
 
 def _forward(params: list[np.ndarray], X: np.ndarray) -> tuple[list[np.ndarray], np.ndarray]:
@@ -66,7 +64,7 @@ class AutoencoderScorer:
     # -- fit ---------------------------------------------------------------
 
     def fit(self, df: DataFrame, features_col: str = "features") -> "AutoencoderScorer":
-        X = self._collect_pool(df, features_col)
+        X = collect_sample(df, features_col, self.max_pool, self.seed)
         rng = np.random.default_rng(self.seed)
         # 80/20 split (M11, train.py:83)
         idx = rng.permutation(len(X))
@@ -122,17 +120,6 @@ class AutoencoderScorer:
                 delta = (delta @ W.T) * (acts[i] > 0)
         return grads
 
-    def _collect_pool(self, df: DataFrame, features_col: str) -> np.ndarray:
-        arr = _as_array(df, features_col)
-        total = df.count()
-        frac = min(1.0, (self.max_pool * 1.2) / max(total, 1))
-        sample = df.select(arr.alias("_x"))
-        if frac < 1.0:
-            sample = sample.sample(fraction=frac, seed=self.seed)
-        return np.array(
-            [r["_x"] for r in sample.limit(self.max_pool).collect()], dtype=np.float64
-        )
-
     # -- score -------------------------------------------------------------
 
     def mse_col(self, df: DataFrame, features_col: str = "features") -> Column:
@@ -161,7 +148,7 @@ class AutoencoderScorer:
                     h = np.maximum(h, 0.0)
             return pd.Series(((X - h) ** 2).mean(axis=1))
 
-        return _mse(_as_array(df, features_col))
+        return _mse(as_array(df, features_col))
 
     def score_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """clip(mse/threshold, 0, 1) — M10/F9."""

@@ -18,6 +18,8 @@ from __future__ import annotations
 import json
 import os
 import pickle
+from contextlib import contextmanager
+from typing import Iterator
 
 import numpy as np
 from pyspark.ml import PipelineModel
@@ -35,8 +37,12 @@ from .features import build_feature_pipeline
 from .iforest import IsolationForestModel
 from .lof import LOFNoveltyModel
 from .reconstruction import ReconstructionScorer
+from .sampling import collect_sample
 
 MODEL_VERSION = "spark-ensemble-v1"
+# The reconstruction scorer is the PCA linear-AE analog (SURVEY.md M8
+# option (a)); bundles record it under this name.
+AE_VARIANT = "pca"
 
 
 # Row-level parallelism is safe in every kernel here (all row-wise);
@@ -47,89 +53,25 @@ from ..operators.partitioning import spread_narrow as _parallelize  # noqa: E402
 class AnomalyEnsemble:
     def __init__(
         self,
-        numeric_cols: list[str] | None = None,
-        categorical_cols: list[str] | None = None,
         seed: int = 42,
         rule_large_amount: float = 1000.0,
         high_risk_amount: float = 10000.0,
-        ae_variant: str = "pca",
     ):
-        """``ae_variant``: 'pca' (default — the distributed linear-AE
-        analog, SURVEY.md M8 option (a)) or 'mlp' (the faithful
-        nonlinear numpy autoencoder, option (b))."""
-        self.numeric_cols = numeric_cols
-        self.categorical_cols = categorical_cols
         self.seed = seed
         self.rule_large_amount = rule_large_amount
         self.high_risk_amount = high_risk_amount
-        self.ae_variant = ae_variant
         self.feature_model: PipelineModel | None = None
         self.iforest = IsolationForestModel(seed=seed)
         self.lof = LOFNoveltyModel(seed=seed)
-        if ae_variant == "mlp":
-            from .autoencoder import AutoencoderScorer
-
-            self.recon = AutoencoderScorer(seed=seed)
-        elif ae_variant == "pca":
-            self.recon = ReconstructionScorer()
-        else:
-            raise ValueError(f"unknown ae_variant {ae_variant!r} (use 'pca' or 'mlp')")
+        self.recon = ReconstructionScorer()
 
     # -- train (§3.2) ------------------------------------------------------
 
     def fit(self, feature_df: DataFrame) -> "AnomalyEnsemble":
         """feature_df must carry the 10 feature columns
         (schemas.FEATURE_COLS shape)."""
-        # Pin the raw feature frame: the MLlib pipeline fit runs one job
-        # per stage (two StringIndexer distincts + the scaler stats
-        # pass), each of which would otherwise replay the upstream
-        # feature prep. persist (not localCheckpoint) so the blocks are
-        # RELEASED when fit returns — all model state lives driver-side
-        # after fitting, and leaked pins slowly squeeze execution memory
-        # in long sessions.
-        feature_df = _parallelize(feature_df).persist()
-        pipeline = build_feature_pipeline(self.numeric_cols, self.categorical_cols)
-        try:
-            self.feature_model = pipeline.fit(feature_df)
-            # Pin the transformed features once too: the three scorer
-            # fits (plus the 80/20 split) each trigger their own
-            # bounded-sample collect, and without pinning every one
-            # replays the full MLlib transform over the corpus.
-            feats = self.feature_model.transform(feature_df).persist()
-            try:
-                self._fit_scorers(feats)
-            finally:
-                feats.unpersist()
-        finally:
-            feature_df.unpersist()
-        return self
-
-    def _fit_scorers(self, feats: DataFrame) -> None:
-        # Split discipline mirrors train.py:71-88: IsolationForest
-        # and LOF fit on the FULL feature matrix; the autoencoder
-        # analog trains with its threshold calibrated on the held-out
-        # 20% split (M9/M11, seed=42 ≙ train.py:83).
-        #
-        # ONE bounded sample pool (O(max_pool) rows, the only fit-time
-        # data movement) is collected and shared by all three scorers —
-        # the engine analog of the reference loading its training frame
-        # once (train.py:40-57): IForest subsamples trees from it, LOF
-        # takes a seeded reference subset, the linear-AE estimates its
-        # subspace from the pool's covariance. Only the AE threshold
-        # still runs distributed (exact percentile on the held-out
-        # split).
-        pool = self.iforest._collect_pool(feats, "features")
-        self.iforest.fit_pool(pool)
-        self.lof.fit_pool(pool)
-        if self.ae_variant == "mlp":
-            # AutoencoderScorer performs the 80/20 train/val
-            # split and held-out threshold calibration internally.
-            self.recon.fit(feats)
-        else:
-            train, val = feats.randomSplit([0.8, 0.2], seed=self.seed)
-            self.recon.fit(train, val_df=val, pool=pool)
-
-    # -- score (§3.1) ------------------------------------------------------
+        with self._fit_pinned(feature_df):
+            return self
 
     def fit_transform(self, feature_df: DataFrame, id_col: str = "event_id") -> DataFrame:
         """fit() + transform() sharing ONE pinned feature frame.
@@ -145,18 +87,56 @@ class AnomalyEnsemble:
         returning — the caller gets a computed, lineage-free frame
         (bounded: one ScoreOut row per input row).
         """
+        with self._fit_pinned(feature_df) as feats:
+            return self._score_plan(feats, id_col).localCheckpoint(eager=True)
+
+    @contextmanager
+    def _fit_pinned(self, feature_df: DataFrame) -> Iterator[DataFrame]:
+        """Fit the pipeline and the scorers; yield the transformed
+        features while they are still pinned, then release every pin."""
+        # Pin the raw feature frame: the MLlib pipeline fit runs one job
+        # per stage (two StringIndexer distincts + the scaler stats
+        # pass), each of which would otherwise replay the upstream
+        # feature prep. persist (not localCheckpoint) so the blocks are
+        # RELEASED when fit returns — all model state lives driver-side
+        # after fitting, and leaked pins slowly squeeze execution memory
+        # in long sessions.
         feature_df = _parallelize(feature_df).persist()
-        pipeline = build_feature_pipeline(self.numeric_cols, self.categorical_cols)
         try:
-            self.feature_model = pipeline.fit(feature_df)
+            self.feature_model = build_feature_pipeline().fit(feature_df)
+            # Pin the transformed features once too: the scorer fits
+            # (the pool collect plus the 80/20 split) would otherwise
+            # each replay the full MLlib transform over the corpus.
             feats = self.feature_model.transform(feature_df).persist()
             try:
                 self._fit_scorers(feats)
-                return self._score_plan(feats, id_col).localCheckpoint(eager=True)
+                yield feats
             finally:
                 feats.unpersist()
         finally:
             feature_df.unpersist()
+
+    def _fit_scorers(self, feats: DataFrame) -> None:
+        # Split discipline mirrors train.py:71-88: IsolationForest
+        # and LOF fit on the FULL feature matrix; the autoencoder
+        # analog trains with its threshold calibrated on the held-out
+        # 20% split (M9/M11, seed=42 ≙ train.py:83).
+        #
+        # ONE bounded sample pool (O(max_pool) rows, the only fit-time
+        # data movement) is collected and shared by all three scorers —
+        # the engine analog of the reference loading its training frame
+        # once (train.py:40-57): IForest subsamples trees from it, LOF
+        # takes a seeded reference subset, the linear-AE estimates its
+        # subspace from the pool's covariance. Only the AE threshold
+        # still runs distributed (exact percentile on the held-out
+        # split).
+        pool = collect_sample(feats, "features", self.iforest.max_pool, self.seed)
+        self.iforest.fit_pool(pool)
+        self.lof.fit_pool(pool)
+        train, val = feats.randomSplit([0.8, 0.2], seed=self.seed)
+        self.recon.fit(train, val_df=val, pool=pool)
+
+    # -- score (§3.1) ------------------------------------------------------
 
     def transform(self, feature_df: DataFrame, id_col: str = "event_id") -> DataFrame:
         """Full scoring plan: features -> 3 model scores -> rules ->
@@ -210,32 +190,30 @@ class AnomalyEnsemble:
         self.feature_model.write().overwrite().save(os.path.join(path, "feature_pipeline"))
         with open(os.path.join(path, "trees.pkl"), "wb") as f:
             pickle.dump(self.iforest.trees, f)
-        blobs = {
-            "lof_X": self.lof.X_train,
-            "lof_kdist": self.lof.kdist_train,
-            "lof_lrd": self.lof.lrd_train,
-        }
-        if self.ae_variant == "pca":
-            blobs["recon_W"] = self.recon.components
-            blobs["recon_mean"] = self.recon.mean
-        else:  # mlp: flat param list with indexed keys
-            for i, p in enumerate(self.recon.params):
-                blobs[f"ae_param_{i}"] = p
-        np.savez_compressed(os.path.join(path, "model.npz"), **blobs)
+        np.savez_compressed(
+            os.path.join(path, "model.npz"),
+            lof_X=self.lof.X_train,
+            lof_kdist=self.lof.kdist_train,
+            lof_lrd=self.lof.lrd_train,
+            recon_W=self.recon.components,
+            recon_mean=self.recon.mean,
+        )
+        # Every key stays, ae_variant and ae_n_params included: loaders
+        # of older and newer builds read the same meta.json.
         meta = {
             "model_version": MODEL_VERSION,
             "seed": self.seed,
             "rule_large_amount": self.rule_large_amount,
             "high_risk_amount": self.high_risk_amount,
-            "ae_variant": self.ae_variant,
+            "ae_variant": AE_VARIANT,
             "iforest": {
                 "n_estimators": self.iforest.n_estimators,
                 "max_samples": self.iforest.max_samples,
                 "c_psi": self.iforest._c_psi,
             },
             "lof_n_neighbors": self.lof.n_neighbors,
-            "recon_k": getattr(self.recon, "k", None),
-            "ae_n_params": len(self.recon.params) if self.ae_variant == "mlp" else 0,
+            "recon_k": self.recon.k,
+            "ae_n_params": 0,
             "recon_threshold": self.recon.threshold,
         }
         with open(os.path.join(path, "meta.json"), "w") as f:
@@ -245,11 +223,15 @@ class AnomalyEnsemble:
     def load(cls, spark: SparkSession, path: str) -> "AnomalyEnsemble":
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
+        variant = meta.get("ae_variant", AE_VARIANT)
+        if variant != AE_VARIANT:
+            raise ValueError(
+                f"bundle {path} has ae_variant {variant!r}; only {AE_VARIANT!r} bundles load"
+            )
         self = cls(
             seed=meta["seed"],
             rule_large_amount=meta["rule_large_amount"],
             high_risk_amount=meta["high_risk_amount"],
-            ae_variant=meta.get("ae_variant", "pca"),
         )
         self.feature_model = PipelineModel.load(os.path.join(path, "feature_pipeline"))
         with open(os.path.join(path, "trees.pkl"), "rb") as f:
@@ -262,13 +244,8 @@ class AnomalyEnsemble:
         self.lof.kdist_train = blobs["lof_kdist"]
         self.lof.lrd_train = blobs["lof_lrd"]
         self.lof.n_neighbors = meta["lof_n_neighbors"]
-        if self.ae_variant == "pca":
-            self.recon.components = blobs["recon_W"]
-            self.recon.mean = blobs["recon_mean"]
-            self.recon.k = meta["recon_k"]
-        else:
-            self.recon.params = [
-                blobs[f"ae_param_{i}"] for i in range(meta["ae_n_params"])
-            ]
+        self.recon.components = blobs["recon_W"]
+        self.recon.mean = blobs["recon_mean"]
+        self.recon.k = meta["recon_k"]
         self.recon.threshold = meta["recon_threshold"]
         return self

@@ -33,35 +33,28 @@ from ..functions.timefn import time_features
 from ..schemas import CATEGORICAL_FEATURES, NUMERIC_FEATURES
 
 
-def build_feature_pipeline(
-    numeric_cols: list[str] | None = None,
-    categorical_cols: list[str] | None = None,
-    output_col: str = "features",
-) -> Pipeline:
+def build_feature_pipeline() -> Pipeline:
     """M1-M3: the 10-feature preprocessing pipeline
-    (train.py:56-69), MLlib-native."""
-    numeric_cols = numeric_cols or NUMERIC_FEATURES
-    categorical_cols = categorical_cols or CATEGORICAL_FEATURES
-
+    (train.py:56-69), MLlib-native, writing the ``features`` column."""
     indexers = [
         StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep")
-        for c in categorical_cols
+        for c in CATEGORICAL_FEATURES
     ]
     ohe = OneHotEncoder(
-        inputCols=[f"{c}_idx" for c in categorical_cols],
-        outputCols=[f"{c}_vec" for c in categorical_cols],
+        inputCols=[f"{c}_idx" for c in CATEGORICAL_FEATURES],
+        outputCols=[f"{c}_vec" for c in CATEGORICAL_FEATURES],
         handleInvalid="keep",
         dropLast=True,  # drops the 'keep' (unknown) slot -> zero vector, sklearn parity
     )
     num_assembler = VectorAssembler(
-        inputCols=numeric_cols, outputCol="_numeric_raw", handleInvalid="keep"
+        inputCols=NUMERIC_FEATURES, outputCol="_numeric_raw", handleInvalid="keep"
     )
     scaler = StandardScaler(
         inputCol="_numeric_raw", outputCol="_numeric_scaled", withMean=True, withStd=True
     )
     final_assembler = VectorAssembler(
-        inputCols=["_numeric_scaled"] + [f"{c}_vec" for c in categorical_cols],
-        outputCol=output_col,
+        inputCols=["_numeric_scaled"] + [f"{c}_vec" for c in CATEGORICAL_FEATURES],
+        outputCol="features",
     )
     return Pipeline(stages=indexers + [ohe, num_assembler, scaler, final_assembler])
 

@@ -29,8 +29,9 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from .sampling import as_array, collect_sample
 
 
 def _c_factor(n: int) -> float:
@@ -121,7 +122,7 @@ class IsolationForestModel:
     # -- fit ---------------------------------------------------------------
 
     def fit(self, df: DataFrame, features_col: str = "features") -> "IsolationForestModel":
-        return self.fit_pool(self._collect_pool(df, features_col))
+        return self.fit_pool(collect_sample(df, features_col, self.max_pool, self.seed))
 
     def fit_pool(self, pool: np.ndarray) -> "IsolationForestModel":
         """Build the forest from an already-collected sample pool —
@@ -139,33 +140,6 @@ class IsolationForestModel:
             sub = pool[rng.choice(len(pool), size=psi, replace=False)]
             self.trees.append(_Tree(sub, rng, height_limit).as_arrays())
         return self
-
-    def _collect_pool(self, df: DataFrame, features_col: str) -> np.ndarray:
-        """Bounded, seeded sample of feature rows to the driver — the
-        only data movement in fit, O(max_pool) at any scale."""
-        arr_col = self._as_array(df, features_col)
-        total = df.count()
-        frac = min(1.0, (self.max_pool * 1.2) / max(total, 1))
-        sample = df.select(arr_col.alias("_x"))
-        if frac < 1.0:
-            sample = sample.sample(fraction=frac, seed=self.seed)
-        sample = sample.limit(self.max_pool)
-        try:
-            # Arrow batch transfer: same rows in the same order as
-            # collect(), minus the per-Row pickle cost (~5x on a
-            # 100k-vector pool).
-            vals = sample.toPandas()["_x"].to_numpy()
-            return np.stack(vals).astype(np.float64) if len(vals) else np.empty((0, 0))
-        except Exception:
-            rows = sample.collect()
-            return np.array([r["_x"] for r in rows], dtype=np.float64)
-
-    @staticmethod
-    def _as_array(df: DataFrame, features_col: str) -> Column:
-        dt = df.schema[features_col].dataType
-        if isinstance(dt, T.ArrayType):
-            return F.col(features_col).cast("array<double>")
-        return vector_to_array(F.col(features_col)).cast("array<double>")
 
     # -- score -------------------------------------------------------------
 
@@ -206,7 +180,7 @@ class IsolationForestModel:
             avg_path = total / n_trees
             return pd.Series(np.power(2.0, -avg_path / c_psi))
 
-        return _score(self._as_array(df, features_col))
+        return _score(as_array(df, features_col))
 
     def decision_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """sklearn-convention decision score: higher = more normal

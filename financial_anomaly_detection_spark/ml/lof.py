@@ -28,9 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .iforest import IsolationForestModel
-
-_as_array = IsolationForestModel._as_array
+from .sampling import as_array, collect_sample
 
 
 class LOFNoveltyModel:
@@ -43,14 +41,7 @@ class LOFNoveltyModel:
         self.lrd_train: np.ndarray | None = None
 
     def fit(self, df: DataFrame, features_col: str = "features") -> "LOFNoveltyModel":
-        arr = _as_array(df, features_col)
-        total = df.count()
-        frac = min(1.0, (self.max_train * 1.2) / max(total, 1))
-        sample = df.select(arr.alias("_x"))
-        if frac < 1.0:
-            sample = sample.sample(fraction=frac, seed=self.seed)
-        X = np.array([r["_x"] for r in sample.limit(self.max_train).collect()], dtype=np.float64)
-        return self._fit_reference(X)
+        return self.fit_pool(collect_sample(df, features_col, self.max_train, self.seed))
 
     def fit_pool(self, pool: np.ndarray) -> "LOFNoveltyModel":
         """Fit from an already-collected sample pool (shared with the
@@ -97,14 +88,6 @@ class LOFNoveltyModel:
         reach = np.maximum(self.kdist_train[nn_idx], nn_d)
         self.lrd_train = k / np.maximum(reach.mean(axis=1), 1e-12)
         return self
-
-    @staticmethod
-    def _sq_dists(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-        return (
-            (A * A).sum(axis=1)[:, None]
-            + (B * B).sum(axis=1)[None, :]
-            - 2.0 * (A @ B.T)
-        )
 
     def lof_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """LOF of each row vs the training reference set (novelty)."""
@@ -158,7 +141,7 @@ class LOFNoveltyModel:
                 )
             return pd.Series(out)
 
-        return _lof(_as_array(df, features_col))
+        return _lof(as_array(df, features_col))
 
     def decision_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """sklearn-shaped decision score (higher = more normal)."""

@@ -21,12 +21,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.ml.feature import PCA
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .iforest import IsolationForestModel
-
-_as_array = IsolationForestModel._as_array
+from .sampling import as_array
 
 
 class ReconstructionScorer:
@@ -65,7 +62,7 @@ class ReconstructionScorer:
             w, v = np.linalg.eigh(cov)
             self.components = v[:, ::-1][:, :k].copy()
             return self._calibrate(df, features_col, val_df)
-        arr = _as_array(df, features_col)
+        arr = as_array(df, features_col)
         d = len(df.select(arr).first()[0])
         k = min(self.k, d)
 
@@ -142,7 +139,7 @@ class ReconstructionScorer:
         """
         if self.components is None:
             raise RuntimeError("fit() first")
-        arr0 = _as_array(df, features_col)
+        arr0 = as_array(df, features_col)
         d, k = self.components.shape
         if d <= 32:
             c = [arr0[i] - float(self.mean[i]) for i in range(d)]
@@ -179,7 +176,7 @@ class ReconstructionScorer:
             captured = (proj * proj).sum(axis=1)
             return pd.Series(np.maximum(total - captured, 0.0) / X.shape[1])
 
-        return _mse(_as_array(df, features_col))
+        return _mse(as_array(df, features_col))
 
     def score_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """Normalized AE-style score: clip(mse / threshold, 0, 1)

@@ -14,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 # Rounds-to-fixpoint of the most recent convergence-loop call, keyed by
-# function name — drill/observability metadata only (tools/
-# diameter_drill.py records it); never read by query logic. PROBE-
+# function name — drill/observability metadata only (the graph tests
+# read it); never read by query logic. PROBE-
 # granular: loops that probe every ``check_every`` rounds record the
 # round at which the fixpoint PROBE fired, which rounds the true
 # convergence round UP to the next check_every multiple (overstating
@@ -67,7 +67,7 @@ def connected_components(
     monotonically non-increasing, so iteration converges in at most
     O(diameter) rounds.
 
-    ROUTING (measured, tools/diameter_drill.py, SCALING.md §round-8):
+    ROUTING (measured, SCALING.md §round-8):
     rounds here are EXACTLY the graph diameter (path fixtures: 64 /
     256 / 1024 recorded rounds at diameters 63 / 255 / 1023; the
     63-diameter count is exact [check_every=1], the larger two are
@@ -406,7 +406,7 @@ def connected_components_auto(
     twophase_max_rounds: int = 30,
 ) -> DataFrame:
     """Diameter-adaptive connected components — the measured routing
-    note (SCALING.md §round-8, tools/diameter_drill.py) turned into
+    note (SCALING.md §round-8) turned into
     code (VERDICT r8 task 6).
 
     Strategy for UNKNOWN-diameter graphs: run cheap min-label

@@ -7,8 +7,10 @@ The reference persists one row per scored transaction into MySQL
   * batch: ``write_scores_parquet`` / ``write_scores_jdbc`` — bulk
     appends, partitioned by score date so downstream reads prune.
   * streaming: ``foreach_batch_parquet`` — a foreachBatch hook doing
-    the same bulk append per micro-batch (exactly-once per batch via
-    the streaming checkpoint + idempotent file commits).
+    the same bulk append per micro-batch. This is AT-LEAST-once, not
+    exactly-once: Spark replays a batch whose write finished but whose
+    commit-log entry did not, and the replay appends its rows a second
+    time. An idempotent sink keyed by ``batch_id`` is ROADMAP item 3.
 
 JDBC is code-path-complete but exercised only when a JDBC URL is
 supplied (no database ships in the test container).

@@ -11,5 +11,4 @@ from .score_stream import (  # noqa: F401
     build_scoring_stream,
     split_valid_invalid,
     stateful_user_profiles,
-    windowed_user_profiles,
 )

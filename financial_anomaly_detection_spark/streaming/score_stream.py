@@ -9,15 +9,9 @@ is ONE declarative plan applied to a stream:
     join (J1/J2) -> rule/fusion/risk columns (F7-F13) -> foreachBatch
     sink (S4)
 
-plus two profile-state designs:
-
-  * ``windowed_user_profiles`` — event-time sliding-window aggregation
-    with a watermark (W3/W4): built-in state store, late rows beyond
-    the watermark are dropped (documented divergence: the reference's
-    DB query has unbounded lateness).
-  * ``stateful_user_profiles`` — ``applyInPandasWithState`` keeping
-    per-user running (sum, count): the incremental form of the 90-day
-    profile, O(keys) state, no recomputation per batch.
+plus ``stateful_user_profiles`` — ``applyInPandasWithState`` keeping
+per-user running (sum, count): the incremental form of the 90-day
+profile, O(keys) state, no recomputation per batch.
 """
 
 from __future__ import annotations
@@ -37,6 +31,7 @@ from ..functions.scoring import (
     rule_score,
 )
 from ..functions.timefn import time_features
+from ..operators.profiles import with_profiles
 
 
 def split_valid_invalid(tx: DataFrame) -> Tuple[DataFrame, DataFrame]:
@@ -76,12 +71,10 @@ def build_scoring_stream(
     real model scores.
     """
     tf = time_features(F.try_to_timestamp("timestamp"))
-    enriched = (
-        tx_stream.withColumn("ts", F.try_to_timestamp("timestamp"))
-        .withColumn("hour", tf["hour"])
-        .join(F.broadcast(cust_profile), "customer_id", "left")
-        .join(F.broadcast(merch_profile), "merchant_id", "left")
-        .na.fill(0.0, subset=["cust_avg_amount", "cust_txn_count", "merch_avg_amount"])
+    enriched = with_profiles(
+        tx_stream.withColumn("ts", F.try_to_timestamp("timestamp")).withColumn("hour", tf["hour"]),
+        cust_profile,
+        merch_profile,
     )
     score = model_score if model_score is not None else F.lit(0.0)
     scored = (
@@ -116,29 +109,6 @@ def build_scoring_stream(
     )
 
 
-def windowed_user_profiles(
-    tx_stream: DataFrame,
-    key: str = "customer_id",
-    amount: str = "amount",
-    ts: str = "ts",
-    window: str = "90 days",
-    slide: str = "1 day",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """W3/W5 + W4: event-time sliding-window profile aggregation.
-    Built-in state store handles window state; the watermark bounds it
-    and drops later arrivals (divergence from the reference's
-    unbounded-lateness DB query — documented in SURVEY.md W4)."""
-    return (
-        tx_stream.withWatermark(ts, watermark)
-        .groupBy(F.window(F.col(ts), window, slide).alias("win"), F.col(key))
-        .agg(
-            F.avg(amount).alias("cust_avg_amount"),
-            F.count(F.lit(1)).cast("double").alias("cust_txn_count"),
-        )
-    )
-
-
 # applyInPandasWithState output/state schemas (module-level so the
 # closure stays self-contained — workers never import this package).
 _PROFILE_STATE_SCHEMA = "total double, cnt long"
@@ -154,9 +124,9 @@ def stateful_user_profiles(tx_stream: DataFrame) -> DataFrame:
 
     The reference recomputes profiles per request with a 90-day SQL
     scan (app.py:121-135); this is the engine-native incremental
-    replacement. (Time-based eviction of >90d contributions belongs to
-    the windowed variant above; running totals here match the
-    reference's all-history fallback when no anchor is given.)
+    replacement. (Running totals here match the reference's all-history
+    fallback when no anchor is given; there is no time-based eviction
+    of >90d contributions.)
     """
 
     def update(

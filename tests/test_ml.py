@@ -157,23 +157,47 @@ def test_autoencoder_ranks_planted_anomalies(spark):
     assert mm[0] >= 0.0 and mm[1] <= 1.0
 
 
-def test_ensemble_mlp_variant_roundtrip(spark, sf_dir, tmp_path):
-    """M8(b) wired into the ensemble: fit/score/save/load with the
-    nonlinear AE variant."""
+def test_load_rejects_unknown_ae_variant(tmp_path):
+    """A bundle whose meta.json names another autoencoder variant must
+    fail with a ValueError naming it, not a KeyError on a missing blob."""
+    import json
+
+    (tmp_path / "meta.json").write_text(json.dumps({"ae_variant": "mlp", "seed": 42}))
+    with pytest.raises(ValueError, match="'mlp'"):
+        AnomalyEnsemble.load(None, str(tmp_path))
+
+
+def _seeded_sample(df, col, n, seed):
+    """The bounded-sample contract, spelled out in plain Spark."""
+    frac = n * 1.2 / df.count()
+    rows = df.select(col).sample(fraction=frac, seed=seed).limit(n).collect()
+    return np.array([r[col] for r in rows], dtype=np.float64)
+
+
+def test_collect_sample_matches_seeded_sample_limit(spark, planted):
+    from financial_anomaly_detection_spark.ml.sampling import collect_sample
+
+    want = _seeded_sample(planted, "vec", 100, 7)
+    got = collect_sample(planted, "vec", 100, 7)
+    assert want.shape[0] > 0
+    assert np.array_equal(got, want)
+
+
+def test_lof_fit_equals_fit_pool_on_sample(spark, planted):
+    a = LOFNoveltyModel(max_train=200, seed=3).fit(planted, "vec")
+    b = LOFNoveltyModel(max_train=200, seed=3).fit_pool(_seeded_sample(planted, "vec", 200, 3))
+    assert np.array_equal(a.X_train, b.X_train)
+    assert np.array_equal(a.kdist_train, b.kdist_train)
+    assert np.array_equal(a.lrd_train, b.lrd_train)
+
+
+def test_ensemble_fit_transform_equals_fit_then_transform(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    features = prepare_event_features(ev).limit(500).cache()
-    ens = AnomalyEnsemble(
-        seed=42, rule_large_amount=150.0, high_risk_amount=300.0, ae_variant="mlp"
-    )
-    ens.fit(features)
-    out = ens.transform(features).cache()
-    assert out.count() == 500
-    path = str(tmp_path / "bundle_mlp")
-    ens.save(path)
-    loaded = AnomalyEnsemble.load(spark, path)
-    assert loaded.ae_variant == "mlp"
-    a = out.orderBy("event_id").collect()
-    b = loaded.transform(features).orderBy("event_id").collect()
+    features = prepare_event_features(ev).cache()
+    kw = dict(seed=42, rule_large_amount=150.0, high_risk_amount=300.0)
+    a = AnomalyEnsemble(**kw).fit_transform(features).orderBy("event_id").collect()
+    b = AnomalyEnsemble(**kw).fit(features).transform(features).orderBy("event_id").collect()
+    assert len(a) == ev.count()
     assert a == b
 
 

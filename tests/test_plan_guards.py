@@ -4,8 +4,7 @@ PLANS.md documents the plans we want; this test FAILS if a future
 change silently de-optimizes one — an unplanned nested-loop join
 appearing, or a scan reading more columns than the query needs
 (pruning lost). Expectations were generated from the current plans
-(tools/plan_report.py logic) and reviewed against SCALING.md's design
-claims.
+and reviewed against SCALING.md's design claims.
 
 Mostly explain-only, with one caveat: queries that pin an
 intermediate via ``localCheckpoint(eager=True)``
@@ -617,18 +616,43 @@ def test_quantile_knot_stage_prunes_events_scan(spark, sf_dir):
 # parquet array whose inferred isnotnull/size predicate could have
 # pushed into the scan. This guard machine-checks the invariant on
 # generate-carrying representatives of every family that reads
-# parquet directly (the checkpoint-hidden ones are covered by their
-# pre-checkpoint builder guards above): re-enabling the rule must not
-# change any scan's PushedFilters or ReadSchema.
+# parquet: re-enabling the rule must not change any scan's
+# PushedFilters or ReadSchema. Each representative must still carry
+# both a Generate node and a parquet scan, or the check is vacuous.
 
-_GENERATE_REPRESENTATIVES = [
-    "jaccard_pairs_prefix_filter",   # shingle explode over documents
-    "duplicate_chunks_across_docs",  # gram explode over documents
-    "feature_hashing_docs",          # token explode over documents
-    "longest_dup_span_pairs",        # positional-gram explode
-    "fuzzy_name_pairs_ed1",          # deletion-variant explode (customer)
-    "explode_type_matrix",           # array explode over events
-]
+
+def _registered(name):
+    return lambda spark, sf_dir: REGISTRY[name].fn(spark, sf_dir)
+
+
+def _prefix_filter_shingle_explode(spark, sf_dir):
+    """jaccard_pairs_prefix_filter's shingle explode on the
+    pre-checkpoint builder: the query's final plan reads the r13
+    shingle-array pin, not parquet."""
+    from pyspark.sql import functions as F
+
+    from financial_anomaly_detection_spark.operators.dedup import _shingle_arrays
+    from financial_anomaly_detection_spark.queries.common import load_table
+
+    arrs = _shingle_arrays(load_table(spark, sf_dir, "documents"), "doc_id", "text", 3)
+    return arrs.select("_id", F.size("_arr").alias("_sz"), F.explode("_arr").alias("_sh"))
+
+
+_GENERATE_REPRESENTATIVES = {
+    "jaccard_pairs_prefix_filter": _prefix_filter_shingle_explode,  # shingle explode
+    "duplicate_chunks_across_docs": _registered("duplicate_chunks_across_docs"),  # gram explode
+    "feature_hashing_docs": _registered("feature_hashing_docs"),  # token explode
+    "longest_dup_span_pairs": _registered("longest_dup_span_pairs"),  # positional grams
+    "fuzzy_name_pairs_ed1": _registered("fuzzy_name_pairs_ed1"),  # deletion variants
+    "explode_type_matrix": _registered("explode_type_matrix"),  # array explode over events
+}
+
+
+def _generate_plan(spark, name, sf_dir):
+    df = _GENERATE_REPRESENTATIVES[name](spark, sf_dir)
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
 
 
 def _scan_pushdown_facts(plan: str) -> list[tuple[str, str]]:
@@ -652,17 +676,21 @@ def test_generate_filter_inference_not_needed_for_scan_pruning(spark, sf_dir):
 
     excluded_plans = {}
     for name in _GENERATE_REPRESENTATIVES:
-        plan = _plan(spark, name, sf_dir)
+        plan = _generate_plan(spark, name, sf_dir)
         assert "Generate" in plan, (
             f"{name} no longer carries a Generate node — replace it in "
             "_GENERATE_REPRESENTATIVES to keep the family covered"
         )
         excluded_plans[name] = _scan_pushdown_facts(plan)
+        assert excluded_plans[name], (
+            f"{name} no longer reads parquet — point it at a pre-checkpoint "
+            "builder in _GENERATE_REPRESENTATIVES to keep the family covered"
+        )
     key = "spark.sql.optimizer.excludedRules"
     try:
         spark.conf.set(key, "")
         for name in _GENERATE_REPRESENTATIVES:
-            with_rule = _scan_pushdown_facts(_plan(spark, name, sf_dir))
+            with_rule = _scan_pushdown_facts(_generate_plan(spark, name, sf_dir))
             assert with_rule == excluded_plans[name], (
                 f"{name}: scan pushdown differs with InferFiltersFromGenerate "
                 f"re-enabled — a generator input has become scan-prunable and "

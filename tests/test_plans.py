@@ -105,3 +105,55 @@ def test_train_raises_on_empty_csv(spark, tmp_path):
     p.write_text("timestamp,transaction_id,customer_id,merchant_id,amount,channel,location\n")
     with pytest.raises(ValueError, match="no rows"):
         train_from_csv(spark, str(p), str(tmp_path / "m"))
+
+
+def test_benchmark_reaches_its_product_names(spark, tx_csv, monkeypatch):
+    """perfbench/workloads.py imports these names and instruments these
+    methods; a refactor that renames one must fail here, not at
+    benchmark time."""
+    import importlib
+
+    from financial_anomaly_detection_spark.ml.ensemble import AnomalyEnsemble
+    from financial_anomaly_detection_spark.ml.iforest import IsolationForestModel
+    from financial_anomaly_detection_spark.ml.lof import LOFNoveltyModel
+    from financial_anomaly_detection_spark.ml.reconstruction import ReconstructionScorer
+    from financial_anomaly_detection_spark.plans import scoring_plan
+
+    pkg = "financial_anomaly_detection_spark"
+    for module, names in {
+        "session": ["get_spark"],
+        "schemas": ["TRANSACTION_SCHEMA"],
+        "operators.partitioning": ["spread_narrow"],
+        "operators.profiles": ["customer_profile", "merchant_profile"],
+        "plans.scoring_plan": [
+            "prepare_transaction_features", "score_transactions", "train_from_csv",
+            "with_window_profiles",
+        ],
+        "sources.readers": ["read_transactions_csv", "read_transactions_json_stream"],
+        "sources.sinks": ["write_scores_parquet", "foreach_batch_parquet"],
+        "streaming.score_stream": ["build_scoring_stream", "split_valid_invalid"],
+    }.items():
+        mod = importlib.import_module(f"{pkg}.{module}")
+        for name in names:
+            assert hasattr(mod, name), f"{module}.{name}"
+    for cls, method in (
+        (AnomalyEnsemble, "_fit_scorers"),
+        (AnomalyEnsemble, "save"),
+        (AnomalyEnsemble, "load"),
+        (AnomalyEnsemble, "transform"),
+        (IsolationForestModel, "fit_pool"),
+        (LOFNoveltyModel, "fit_pool"),
+        (ReconstructionScorer, "fit"),
+    ):
+        assert callable(getattr(cls, method)), f"{cls.__name__}.{method}"
+    ens = AnomalyEnsemble()
+    assert hasattr(ens, "feature_model")
+    for scorer, method in ((ens.iforest, "decision_col"), (ens.lof, "decision_col"), (ens.recon, "score_col")):
+        assert callable(getattr(scorer, method))
+
+    # The traced run times the window stage by patching the module
+    # global; prepare_transaction_features must look it up there.
+    tx = read_transactions_csv(spark, tx_csv)
+    assert "cust_avg_amount" in scoring_plan.prepare_transaction_features(tx).columns
+    monkeypatch.setattr(scoring_plan, "with_window_profiles", lambda df: df)
+    assert "cust_avg_amount" not in scoring_plan.prepare_transaction_features(tx).columns

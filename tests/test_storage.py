@@ -200,7 +200,7 @@ def test_skewed_profile_salting_bounds_hot_key(spark):
     reproduce the plain groupBy bit-exactly and (b) bound every
     phase-1 reduce group far below the hot key's total — the
     deterministic form of "the hot key no longer runs through one
-    task". tools/skew_drill.py measures the wall-clock companion."""
+    task". SCALING.md records the wall-clock companion."""
     from financial_anomaly_detection_spark.operators.profiles import salted_group_stats
 
     n_rows, n_salt = 100_000, 32
