@@ -17,6 +17,8 @@ from pyspark.sql import Column, functions as F
 SCORE_THRESHOLD_HIGH = -0.3
 SCORE_THRESHOLD_MED = -0.1
 AMOUNT_HIGH_RISK = 10000.0
+# Width of the decision-score sigmoid (python_scoring/app.py:189-190).
+INV_SIGMOID_SCALE = 0.1
 
 # Rule weights (python_scoring/app.py:156-164; api/app.py:167-179).
 RULE_LARGE_AMOUNT_T = 1000.0
@@ -41,11 +43,15 @@ def deviation_ratio(amount: Column | str, avg: Column | str) -> Column:
     return F.when(avg > 0, (amount - avg) / (avg + F.lit(1e-9))).otherwise(F.lit(0.0))
 
 
-def inv_sigmoid(score: Column | str, center: float = SCORE_THRESHOLD_MED, scale: float = 0.1) -> Column:
-    """F8 — ``1 / (1 + exp((x - center) / scale))``
+def inv_sigmoid(score: Column | str) -> Column:
+    """F8 — ``1 / (1 + exp((x - center) / scale))`` with center
+    ``SCORE_THRESHOLD_MED`` and scale ``INV_SIGMOID_SCALE``
     (python_scoring/app.py:189-190): maps sklearn decision scores
     (higher = more normal) to anomaly probability (higher = worse)."""
-    return F.lit(1.0) / (F.lit(1.0) + F.exp((_c(score) - F.lit(center)) / F.lit(scale)))
+    return F.lit(1.0) / (
+        F.lit(1.0)
+        + F.exp((_c(score) - F.lit(SCORE_THRESHOLD_MED)) / F.lit(INV_SIGMOID_SCALE))
+    )
 
 
 def clip01(col: Column | str) -> Column:

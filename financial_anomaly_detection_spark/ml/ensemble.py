@@ -37,7 +37,7 @@ from .features import build_feature_pipeline
 from .iforest import IsolationForestModel
 from .lof import LOFNoveltyModel
 from .reconstruction import ReconstructionScorer
-from .sampling import collect_sample
+from .sampling import MAX_POOL, collect_sample
 
 MODEL_VERSION = "spark-ensemble-v1"
 # The reconstruction scorer is the PCA linear-AE analog (SURVEY.md M8
@@ -122,7 +122,7 @@ class AnomalyEnsemble:
         # analog trains with its threshold calibrated on the held-out
         # 20% split (M9/M11, seed=42 ≙ train.py:83).
         #
-        # ONE bounded sample pool (O(max_pool) rows, the only fit-time
+        # ONE bounded sample pool (O(MAX_POOL) rows, the only fit-time
         # data movement) is collected and shared by all three scorers —
         # the engine analog of the reference loading its training frame
         # once (train.py:40-57): IForest subsamples trees from it, LOF
@@ -130,7 +130,7 @@ class AnomalyEnsemble:
         # subspace from the pool's covariance. Only the AE threshold
         # still runs distributed (exact percentile on the held-out
         # split).
-        pool = collect_sample(feats, "features", self.iforest.max_pool, self.seed)
+        pool = collect_sample(feats, "features", MAX_POOL, self.seed)
         self.iforest.fit_pool(pool)
         self.lof.fit_pool(pool)
         train, val = feats.randomSplit([0.8, 0.2], seed=self.seed)

@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .sampling import as_array, collect_sample
+from .sampling import MAX_POOL, as_array, collect_sample
 
 
 def _c_factor(n: int) -> float:
@@ -109,12 +109,10 @@ class IsolationForestModel:
         n_estimators: int = 200,
         max_samples: int = 256,
         seed: int = 42,
-        max_pool: int = 100_000,
     ):
         self.n_estimators = n_estimators
         self.max_samples = max_samples
         self.seed = seed
-        self.max_pool = max_pool
         # list of (feature, threshold, left, right, leaf_value) arrays
         self.trees: list[tuple[np.ndarray, ...]] | None = None
         self._c_psi: float = 1.0
@@ -122,7 +120,7 @@ class IsolationForestModel:
     # -- fit ---------------------------------------------------------------
 
     def fit(self, df: DataFrame, features_col: str = "features") -> "IsolationForestModel":
-        return self.fit_pool(collect_sample(df, features_col, self.max_pool, self.seed))
+        return self.fit_pool(collect_sample(df, features_col, MAX_POOL, self.seed))
 
     def fit_pool(self, pool: np.ndarray) -> "IsolationForestModel":
         """Build the forest from an already-collected sample pool —

@@ -5,31 +5,35 @@ train.py:18-28) exists to produce one number per row: reconstruction
 MSE, thresholded at the validation 97.5th percentile (train.py:86-88)
 and served as ``clip(mse/threshold, 0, 1)`` (model_wrapper.py:44-49,
 app.py:193). The engine operator is the linear-autoencoder equivalent
-(SURVEY.md §2.7 M8 option (a)): distributed MLlib ``PCA`` fit, with the
-reconstruction error computed as
+(SURVEY.md §2.7 M8 option (a)): a rank-k PCA fit on a bounded sample's
+covariance, with the reconstruction error computed as
 
     mse(x) = (‖x − μ‖² − ‖Wᵀ(x − μ)‖²) / d
 
 — for an orthonormal component matrix W, the residual of the
-rank-k projection. The fit is fully distributed (MLlib RowMatrix SVD);
-scoring is one matmul per Arrow batch in a pandas_udf with the (d × k)
-component matrix broadcast.
+rank-k projection. The fit reads one bounded sample (the same
+discipline as IForest/LOF); the threshold is an exact distributed
+percentile; scoring is one matmul per Arrow batch in a pandas_udf with
+the (d × k) component matrix broadcast.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.ml.feature import PCA
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .sampling import as_array
+from .sampling import MAX_POOL, as_array, collect_sample
+
+# The reference calibrates at the validation P97.5 (train.py:86-88).
+THRESHOLD_QUANTILE = 0.975
+# Seed of the pool sample when the caller passes no pool.
+SAMPLE_SEED = 42
 
 
 class ReconstructionScorer:
-    def __init__(self, k: int = 8, threshold_quantile: float = 0.975):
+    def __init__(self, k: int = 8):
         self.k = k
-        self.threshold_quantile = threshold_quantile
         self.components: np.ndarray | None = None  # (d, k)
         self.mean: np.ndarray | None = None  # (d,)
         self.threshold: float | None = None
@@ -41,78 +45,25 @@ class ReconstructionScorer:
         val_df: DataFrame | None = None,
         pool: np.ndarray | None = None,
     ) -> "ReconstructionScorer":
-        """Fit the rank-k model on ``df``; calibrate the MSE threshold on
-        ``val_df`` when given (the reference's held-out calibration,
-        train.py:83-88) — on ``df`` itself otherwise (in-sample).
-
-        When ``pool`` (an already-collected bounded sample of feature
-        rows, shared with the other scorers by the ensemble) is given,
-        the rank-k subspace comes from that pool's covariance
-        driver-side — zero extra cluster jobs, the same bounded-sample
-        fit discipline as IForest/LOF. The threshold is STILL the
-        exact distributed percentile over the held-out ``val_df``.
+        """Fit the rank-k subspace from the covariance of ``pool`` (a
+        bounded sample of feature rows, shared with the other scorers by
+        the ensemble; a seeded ``MAX_POOL`` sample of ``df`` when not
+        given), driver-side. Calibrate the MSE threshold as the exact
+        distributed percentile over ``val_df`` when given (the
+        reference's held-out calibration, train.py:83-88) — over ``df``
+        itself otherwise (in-sample).
         """
-        if pool is not None and len(pool) > 1:
-            X = np.asarray(pool, dtype=np.float64)
-            d = X.shape[1]
-            k = min(self.k, d)
-            self.mean = X.mean(axis=0)
-            C = X - self.mean
-            cov = (C.T @ C) / len(C)
-            w, v = np.linalg.eigh(cov)
-            self.components = v[:, ::-1][:, :k].copy()
-            return self._calibrate(df, features_col, val_df)
-        arr = as_array(df, features_col)
-        d = len(df.select(arr).first()[0])
-        k = min(self.k, d)
-
-        if d <= 32:
-            # Small-d fast path: ONE codegen aggregate computes every
-            # first and second moment (d + d(d+1)/2 avg expressions),
-            # then the (d, d) covariance eigendecomposition runs
-            # driver-side. The top-k eigenvectors of the covariance
-            # span the same principal subspace as MLlib PCA's top-k
-            # components (eigh vs SVD of the same symmetric matrix —
-            # signs/degenerate rotations may differ, but the rank-k
-            # projection residual, which is all mse_col consumes, is
-            # subspace-invariant). Saves the PCA RowMatrix pass and a
-            # separate mean pass — 3 jobs down to 2, all codegen.
-            cols = [arr[i].alias(f"x{i}") for i in range(d)]
-            flat = df.select(*cols)
-            aggs = [F.avg(f"x{i}").alias(f"m{i}") for i in range(d)]
-            aggs += [
-                F.avg(F.col(f"x{i}") * F.col(f"x{j}")).alias(f"c{i}_{j}")
-                for i in range(d)
-                for j in range(i, d)
-            ]
-            row = flat.agg(*aggs).first()
-            mu = np.array([row[f"m{i}"] for i in range(d)], dtype=np.float64)
-            m2 = np.empty((d, d), dtype=np.float64)
-            for i in range(d):
-                for j in range(i, d):
-                    m2[i, j] = m2[j, i] = row[f"c{i}_{j}"]
-            cov = m2 - np.outer(mu, mu)
-            w, v = np.linalg.eigh(cov)
-            self.mean = mu
-            self.components = v[:, ::-1][:, :k].copy()  # descending eigenvalue order
-        else:
-            # Large-d path: MLlib's distributed Gramian (RowMatrix) —
-            # the moment aggregate above would need d(d+1)/2 buffers
-            # (2080 at d=64), past what one codegen aggregate should
-            # carry.
-            mean_row = df.select(
-                F.array(*[F.avg(arr[i]) for i in range(d)]).alias("m")
-            ).first()["m"]
-            self.mean = np.array(mean_row, dtype=np.float64)
-            centered = df.select(
-                F.array(*[(arr[i] - float(self.mean[i])) for i in range(d)]).alias("_c")
-            )
-            from pyspark.ml.functions import array_to_vector
-
-            vec_df = centered.select(array_to_vector("_c").alias("_v"))
-            model = PCA(k=k, inputCol="_v", outputCol="_p").fit(vec_df)
-            self.components = model.pc.toArray()  # (d, k)
-
+        if pool is None:
+            pool = collect_sample(df, features_col, MAX_POOL, SAMPLE_SEED)
+        if len(pool) == 0:
+            raise ValueError("ReconstructionScorer.fit: no rows to fit (empty sample pool)")
+        X = np.asarray(pool, dtype=np.float64)
+        k = min(self.k, X.shape[1])
+        self.mean = X.mean(axis=0)
+        C = X - self.mean
+        cov = (C.T @ C) / len(C)
+        _, v = np.linalg.eigh(cov)
+        self.components = v[:, ::-1][:, :k].copy()  # descending eigenvalue order
         return self._calibrate(df, features_col, val_df)
 
     def _calibrate(
@@ -124,7 +75,7 @@ class ReconstructionScorer:
         scored = cal_df.withColumn("_mse", self.mse_col(cal_df, features_col))
         self.threshold = float(
             scored.select(
-                F.expr(f"percentile(_mse, {self.threshold_quantile})")
+                F.expr(f"percentile(_mse, {THRESHOLD_QUANTILE})")
             ).first()[0]
         )
         return self

@@ -1,12 +1,17 @@
 """Bounded, seeded training samples — the only fit-time data movement
-of the driver-side scorers (IForest, LOF, the MLP autoencoder and the
-ensemble's shared pool): O(n) rows at any data scale."""
+of the driver-side scorers (IForest, LOF, the reconstruction scorer,
+the MLP autoencoder and the ensemble's shared pool): O(n) rows at any
+data scale."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+# Row bound of the fit pool: the ensemble's shared pool, and the pool
+# IsolationForestModel.fit / ReconstructionScorer.fit sample on their own.
+MAX_POOL = 100_000
 
 
 def as_array(df: DataFrame, col: str) -> Column:

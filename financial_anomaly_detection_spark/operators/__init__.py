@@ -1,7 +1,6 @@
 from .profiles import (  # noqa: F401
     customer_profile,
     merchant_profile,
-    profile_asof,
     with_profiles,
     with_window_profiles,
 )

@@ -566,10 +566,6 @@ def _idct2(block: np.ndarray) -> np.ndarray:
     return _C.T @ block @ _C
 
 
-def _dct2(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 class _HuffDecoder:
     """Canonical Huffman decode table from DHT BITS/HUFFVAL.
 

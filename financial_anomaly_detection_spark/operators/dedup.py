@@ -164,6 +164,14 @@ def ngram_jaccard_pairs(
     to the uncapped tier for every pair sharing at least one sub-cap
     shingle; pairs linked ONLY by boilerplate hotter than the cap are
     the (intended) pruning.
+
+    Pin lifecycle (uncapped tier): the post-explode shingle frame is an
+    eager ``localCheckpoint`` that backs the RETURNED lazy plan, so it
+    outlives this call and cannot be freed here. ``bench.py`` releases
+    it between queries (``release_pins``); any other caller must
+    unpersist it once the result is consumed (drop the session's
+    persistent RDDs), or the shingle-sized pins accumulate in
+    block-manager storage.
     """
     if max_shingle_df is not None:
         cand = jaccard_candidates(df, id_col, text_col, n, max_shingle_df)

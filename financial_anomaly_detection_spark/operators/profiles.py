@@ -11,7 +11,7 @@ every scale, so it always broadcasts and never reshuffles the facts).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.timefn import lookback_filter
 
@@ -20,92 +20,60 @@ from ..functions.timefn import lookback_filter
 PROFILE_WINDOW_DAYS = 90
 
 
-def customer_profile(
-    history: DataFrame,
-    key: str = "customer_id",
-    amount: str = "amount",
-    ts: str = "timestamp",
-    anchor: str | None = None,
-    days: int = PROFILE_WINDOW_DAYS,
-) -> DataFrame:
+def customer_profile(history: DataFrame, anchor: str) -> DataFrame:
     """A1 — per-customer avg amount + per-day frequency over the
-    lookback window (python_scoring/app.py:121-128).
-
-    ``anchor=None`` reproduces the reference's ``NOW()`` semantics;
-    tests pass a pinned anchor for determinism (W2).
-    """
-    if anchor is not None:
-        history = history.filter(lookback_filter(ts, anchor, days))
-    else:
-        history = history.filter(
-            F.col(ts) >= F.current_timestamp() - F.expr(f"INTERVAL {days} DAYS")
+    ``PROFILE_WINDOW_DAYS`` lookback before ``anchor``
+    (python_scoring/app.py:121-128). The anchor stands in for the
+    reference's ``NOW()`` and is pinned so replays are deterministic
+    (W2)."""
+    return (
+        history.filter(lookback_filter("timestamp", anchor, PROFILE_WINDOW_DAYS))
+        .groupBy("customer_id")
+        .agg(
+            F.avg("amount").alias("cust_avg_amount"),
+            (F.count(F.lit(1)) / F.lit(float(PROFILE_WINDOW_DAYS))).alias("cust_txn_count"),
         )
-    return history.groupBy(key).agg(
-        F.avg(amount).alias("cust_avg_amount"),
-        (F.count(F.lit(1)) / F.lit(float(days))).alias("cust_txn_count"),
     )
 
 
-def merchant_profile(
-    history: DataFrame,
-    key: str = "merchant_id",
-    amount: str = "amount",
-    ts: str = "timestamp",
-    anchor: str | None = None,
-    days: int = PROFILE_WINDOW_DAYS,
-) -> DataFrame:
+def merchant_profile(history: DataFrame, anchor: str) -> DataFrame:
     """A2 — per-merchant avg amount over the lookback window
     (python_scoring/app.py:131-137)."""
-    if anchor is not None:
-        history = history.filter(lookback_filter(ts, anchor, days))
-    else:
-        history = history.filter(
-            F.col(ts) >= F.current_timestamp() - F.expr(f"INTERVAL {days} DAYS")
-        )
-    return history.groupBy(key).agg(F.avg(amount).alias("merch_avg_amount"))
+    return (
+        history.filter(lookback_filter("timestamp", anchor, PROFILE_WINDOW_DAYS))
+        .groupBy("merchant_id")
+        .agg(F.avg("amount").alias("merch_avg_amount"))
+    )
 
 
 def with_profiles(
-    tx: DataFrame,
-    cust_profile: DataFrame,
-    merch_profile: DataFrame,
-    cust_key: str = "customer_id",
-    merch_key: str = "merchant_id",
-    broadcast: bool = True,
+    tx: DataFrame, cust_profile: DataFrame, merch_profile: DataFrame
 ) -> DataFrame:
     """J1 + J2 — left-join both profiles onto the fact rows, defaulting
     absent profiles to 0.0 (python_scoring/app.py:127-137 fallback).
 
-    Profiles are broadcast by default: they are bounded by key
-    cardinality, facts are not. At billions of customers the profile
-    side can exceed executor/driver broadcast limits — pass
-    ``broadcast=False`` to degrade to a shuffle (sort-merge) join and
-    let AQE pick the strategy from runtime sizes.
+    Both profiles are broadcast: they are bounded by key cardinality,
+    facts are not, so the fact side is never reshuffled.
     """
-    cp = F.broadcast(cust_profile) if broadcast else cust_profile
-    mp = F.broadcast(merch_profile) if broadcast else merch_profile
-    out = tx.join(cp, on=cust_key, how="left").join(mp, on=merch_key, how="left")
+    out = tx.join(F.broadcast(cust_profile), on="customer_id", how="left").join(
+        F.broadcast(merch_profile), on="merchant_id", how="left"
+    )
     return out.na.fill(
         0.0, subset=["cust_avg_amount", "cust_txn_count", "merch_avg_amount"]
     )
 
 
-def with_window_profiles(
-    tx: DataFrame,
-    cust_key: str = "customer_id",
-    merch_key: str = "merchant_id",
-    amount: str = "amount",
-) -> DataFrame:
+def with_window_profiles(tx: DataFrame) -> DataFrame:
     """J3/A3 — the training path's pandas
     ``groupby(key)[amount].transform('mean'/'count')`` (train.py:47-53):
     every row annotated with its whole-group aggregate. Window form —
     one shuffle per partition key, no join."""
-    cw = Window.partitionBy(cust_key)
-    mw = Window.partitionBy(merch_key)
+    cw = Window.partitionBy("customer_id")
+    mw = Window.partitionBy("merchant_id")
     return (
-        tx.withColumn("cust_avg_amount", F.avg(amount).over(cw))
+        tx.withColumn("cust_avg_amount", F.avg("amount").over(cw))
         .withColumn("cust_txn_count", F.count(F.lit(1)).over(cw).cast("double"))
-        .withColumn("merch_avg_amount", F.avg(amount).over(mw))
+        .withColumn("merch_avg_amount", F.avg("amount").over(mw))
     )
 
 
@@ -149,29 +117,3 @@ def salted_group_stats(
             F.sum("_pn").cast("long").alias("n_events"),
         )
     )
-
-
-def profile_asof(
-    tx: DataFrame,
-    key: str = "customer_id",
-    amount: str = "amount",
-    ts: str = "timestamp",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """The as-of / point-in-time profile (SURVEY.md §2.3 note): each
-    row enriched with the running mean/count of *strictly earlier*
-    events for the same key — the semantically correct generalization
-    of the reference's NOW()-anchored lookup, and the leakage-free form
-    for training-feature generation.
-
-    Rows with no prior history default to 0.0 (same fallback as J1).
-    """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = (
-        Window.partitionBy(key)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return tx.withColumn(
-        "prior_avg_amount", F.coalesce(F.avg(amount).over(w), F.lit(0.0))
-    ).withColumn("prior_txn_count", F.count(F.lit(1)).over(w).cast("double"))

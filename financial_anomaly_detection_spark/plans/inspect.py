@@ -35,14 +35,6 @@ def simple_plan(df: DataFrame) -> str:
     )
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """The formatted-mode physical plan string (node detail blocks)."""
-    spark = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
 def _is_scalar_agg_reduction(child_line: str) -> bool:
     """True when an exchange's child is a keyless partial aggregate.
 

@@ -15,6 +15,7 @@ from ..functions.timefn import time_features, to_utc_timestamp_coerce
 from ..ml.ensemble import AnomalyEnsemble
 from ..operators.profiles import with_window_profiles
 from ..sources.readers import read_transactions_csv
+from ..streaming.score_stream import split_valid_invalid
 
 
 def prepare_transaction_features(tx: DataFrame) -> DataFrame:
@@ -57,11 +58,15 @@ def score_transactions(
     ensemble: AnomalyEnsemble | None = None,
 ) -> DataFrame:
     """§3.1/§3.3: the POST /score(/batch) plan on a static DataFrame —
-    enrich, model-score, fuse, bucket. Loads the bundle when an
+    reject, enrich, model-score, fuse, bucket. Rows the reference's
+    validators reject (P4/P5, app.py:69-79: negative amounts,
+    non-numeric ids) are dropped by the stream's predicate
+    (``split_valid_invalid``) before scoring. Loads the bundle when an
     in-memory ensemble isn't supplied (S6)."""
     if ensemble is None:
         if model_dir is None:
             raise ValueError("need model_dir or ensemble")
         ensemble = AnomalyEnsemble.load(spark, model_dir)
-    features = prepare_transaction_features(tx)
+    valid, _ = split_valid_invalid(tx)
+    features = prepare_transaction_features(valid)
     return ensemble.transform(features, id_col="transaction_id")

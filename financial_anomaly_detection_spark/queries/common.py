@@ -607,18 +607,14 @@ def _ed1_candidate_pairs(names: DataFrame, name_col: str = "name") -> DataFrame:
     callers verify levenshtein and then ``distinct()`` — verify-first
     keeps the dedup shuffle to true matches only (r12).
     """
+    n = F.col(name_col)
+    deletions = F.transform(
+        F.sequence(F.lit(1), F.length(n)),
+        lambda i: F.concat(F.substr(n, F.lit(1), i - 1), F.substr(n, i + 1)),
+    )
     variants = names.select(
-        F.col(name_col).alias("_n"),
-        F.explode(
-            F.array_union(
-                F.array(F.col(name_col)),
-                F.expr(
-                    f"transform(sequence(1, length({name_col})), "
-                    f"i -> concat(substr({name_col}, 1, i - 1), "
-                    f"substr({name_col}, i + 1)))"
-                ),
-            )
-        ).alias("variant"),
+        n.alias("_n"),
+        F.explode(F.array_union(F.array(n), deletions)).alias("variant"),
     )
     groups = (
         variants.groupBy("variant")

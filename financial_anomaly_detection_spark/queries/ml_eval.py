@@ -119,8 +119,8 @@ def q_ml_lof_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ml_reconstruction_embeddings",
     oracle=None,
     description="M8-M10: PCA reconstruction-error scorer (the linear-"
-    "autoencoder engine operator, SURVEY.md M8 option (a)): distributed "
-    "MLlib PCA fit, per-batch matmul scoring, P97.5 threshold (M9).",
+    "autoencoder engine operator, SURVEY.md M8 option (a)): bounded-sample "
+    "covariance fit, per-batch matmul scoring, P97.5 threshold (M9).",
     tags=["ml", "reconstruction"],
 )
 def q_ml_reconstruction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,1 +1,1 @@
-from .readers import load_table, load_tables, read_transactions_csv  # noqa: F401
+from .readers import load_table, read_transactions_csv  # noqa: F401

@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.partitioning import spread_narrow
-from ..schemas import TESTDATA_TABLES, TRANSACTION_SCHEMA
+from ..schemas import TRANSACTION_SCHEMA
 from ..session import configure
 
 # Testdata columns stored as parquet TIMESTAMP(NANOS) → long-of-nanos
@@ -59,19 +59,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # docstring), so this changes wall-clock only.
     df = spread_narrow(df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Load several testdata tables; also registers each as a temp view
-    so plans can be written in either DataFrame or SQL form."""
-    out: dict[str, DataFrame] = {}
-    for name in names or TESTDATA_TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -120,18 +107,17 @@ def read_jdbc_table(
     return reader.load()
 
 
-def read_transactions_json_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_transactions_json_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming JSON transaction source (S5 — the REST-body analog).
 
     The reference receives one pydantic-validated JSON record per HTTP
     request (python_scoring/app.py:239-240); the engine-native form is
-    a file/Kafka stream of JSON records with the same schema.
+    a file/Kafka stream of JSON records with the same schema, admitted
+    one file per micro-batch.
     """
     return (
         spark.readStream.schema(TRANSACTION_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .json(path)
     )
 

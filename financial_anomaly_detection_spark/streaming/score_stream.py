@@ -59,16 +59,14 @@ def build_scoring_stream(
     tx_stream: DataFrame,
     cust_profile: DataFrame,
     merch_profile: DataFrame,
-    model_score: F.Column | None = None,
 ) -> DataFrame:
     """W1: the full scoring tail on a streaming DataFrame.
 
     ``cust_profile``/``merch_profile`` are static (batch) DataFrames —
     Spark plans a stream-static broadcast join per micro-batch, the
     engine replacement for the per-record profile lookups (J1/J2).
-    ``model_score`` defaults to the reference's 0.0 placeholder
-    fallback (W6, api/utils.py:30-37); pass an ensemble column to wire
-    real model scores.
+    The model score is the reference's 0.0 placeholder fallback (W6,
+    api/utils.py:30-37), served with ``model_version="unavailable"``.
     """
     tf = time_features(F.try_to_timestamp("timestamp"))
     enriched = with_profiles(
@@ -76,7 +74,6 @@ def build_scoring_stream(
         cust_profile,
         merch_profile,
     )
-    score = model_score if model_score is not None else F.lit(0.0)
     scored = (
         enriched.withColumn("deviation_score", deviation_ratio("amount", "cust_avg_amount"))
         .withColumn("rule_score", rule_score("amount", "channel", "location", "hour"))
@@ -86,14 +83,12 @@ def build_scoring_stream(
         .withColumn(
             "aggregated_score",
             high_amount_override(
-                fuse_scores_orchestrator("rule_score", score, "deviation_score"), "amount"
+                fuse_scores_orchestrator("rule_score", F.lit(0.0), "deviation_score"),
+                "amount",
             ),
         )
         .withColumn("risk_level", risk_level("aggregated_score"))
-        .withColumn(
-            "model_version",
-            F.when(score == 0.0, F.lit("unavailable")).otherwise(F.lit("spark-ensemble-v1")),
-        )
+        .withColumn("model_version", F.lit("unavailable"))
     )
     return scored.select(
         "transaction_id",

@@ -257,3 +257,16 @@ def test_ed1_pair_expansion_streams_hot_variant_group(spark):
     # the distinct candidate set is exactly the C(1000,2) sorted pairs
     assert cand.filter("name_a >= name_b").count() == 0
     assert cand.distinct().count() == 1000 * 999 // 2
+
+
+def test_ed1_candidate_pairs_any_column_name(spark):
+    """The deletion variants are built with the column API, so a name
+    column that is not a bare SQL identifier works."""
+    from financial_anomaly_detection_spark.queries.common import (
+        _ed1_candidate_pairs,
+    )
+
+    names = ["anna", "ana", "bob", "bobb", "carl"]
+    df = spark.createDataFrame([(n,) for n in names], "`full name` string")
+    cand = _ed1_candidate_pairs(df, "full name").distinct().collect()
+    assert {(r["name_a"], r["name_b"]) for r in cand} == {("ana", "anna"), ("bob", "bobb")}

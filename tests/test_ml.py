@@ -71,21 +71,23 @@ def test_lof_ranks_planted_anomalies(spark, planted):
 
 
 def test_reconstruction_ranks_planted_anomalies(spark, planted):
-    # rank-2 structure + off-plane anomalies
-    rng = np.random.default_rng(11)
-    basis = rng.normal(size=(2, DIM))
-    coords = rng.normal(size=(N_NORMAL, 2))
-    normal = coords @ basis
-    anom = rng.normal(size=(N_ANOM, DIM)) * 6.0
-    rows = [
-        (i, [float(x) for x in v]) for i, v in enumerate(np.vstack([normal, anom]))
-    ]
-    df = spark.createDataFrame(rows, "id long, vec array<double>")
-    model = ReconstructionScorer(k=2).fit(df, "vec")
-    scored = df.withColumn("s", model.mse_col(df, "vec"))
-    top = _top_ids(scored, "s", N_ANOM)
-    assert top == set(range(N_NORMAL, N_NORMAL + N_ANOM))
-    assert model.threshold is not None and model.threshold >= 0
+    # rank-2 structure + off-plane anomalies; d=64 takes mse_col's
+    # Arrow-kernel branch, DIM its Catalyst expression
+    for dim in (DIM, 64):
+        rng = np.random.default_rng(11)
+        basis = rng.normal(size=(2, dim))
+        coords = rng.normal(size=(N_NORMAL, 2))
+        normal = coords @ basis
+        anom = rng.normal(size=(N_ANOM, dim)) * 6.0
+        rows = [
+            (i, [float(x) for x in v]) for i, v in enumerate(np.vstack([normal, anom]))
+        ]
+        df = spark.createDataFrame(rows, "id long, vec array<double>")
+        model = ReconstructionScorer(k=2).fit(df, "vec")
+        scored = df.withColumn("s", model.mse_col(df, "vec"))
+        top = _top_ids(scored, "s", N_ANOM)
+        assert top == set(range(N_NORMAL, N_NORMAL + N_ANOM)), dim
+        assert model.threshold is not None and model.threshold >= 0
 
 
 def test_ensemble_end_to_end_and_roundtrip(spark, sf_dir, tmp_path):
@@ -207,6 +209,12 @@ def test_iforest_empty_fit_raises(spark):
     empty = spark.createDataFrame([], "features array<double>")
     with pytest.raises(ValueError, match="no rows"):
         IsolationForestModel(seed=1).fit(empty, "features")
+
+
+def test_reconstruction_empty_fit_raises(spark):
+    empty = spark.createDataFrame([], "features array<double>")
+    with pytest.raises(ValueError, match="ReconstructionScorer.*no rows"):
+        ReconstructionScorer().fit(empty, "features")
 
 
 def test_distributed_lof_bounded_fanout_at_10x(spark):

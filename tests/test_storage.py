@@ -133,9 +133,8 @@ def test_jdbc_derby_roundtrip(spark, tmp_path):
 
 
 def test_with_profiles_broadcast_valve(spark, sf_dir):
-    """The profile-enrichment join broadcasts by default (profiles are
-    key-bounded) but must degrade to a shuffle join on request — at
-    billions of customers the profile side exceeds broadcast limits."""
+    """The profile-enrichment join broadcasts both profiles (they are
+    key-bounded) even when size-based auto-broadcast is off."""
     from financial_anomaly_detection_spark.operators.profiles import (
         customer_profile,
         merchant_profile,
@@ -157,17 +156,7 @@ def test_with_profiles_broadcast_valve(spark, sf_dir):
         bcast = with_profiles(ev, cp, mp)
         plan_b = bcast._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan_b
-
-        shuf = with_profiles(ev, cp, mp, broadcast=False)
-        plan_s = shuf._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan_s
-        assert "SortMergeJoin" in plan_s or "ShuffledHashJoin" in plan_s
-
-        # both variants compute identical rows
-        cols = ["customer_id", "merchant_id", "cust_avg_amount", "merch_avg_amount"]
-        assert sorted(map(repr, bcast.select(cols).collect())) == sorted(
-            map(repr, shuf.select(cols).collect())
-        )
+        assert "SortMergeJoin" not in plan_b and "ShuffledHashJoin" not in plan_b
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 

@@ -1,113 +1,15 @@
-"""transformWithState (Spark 4 state v2) and Python DataSource tests.
+"""Python DataSource and stateful-streaming operator tests.
 
-The v2 stateful operator must agree with both the classic
-applyInPandasWithState operator and the plain batch aggregation on the
-same data — stream == batch parity in integer-cents exact arithmetic.
-The Python DataSource must be deterministic and partition-parallel.
+The Python DataSource must be deterministic and partition-parallel;
+the streaming near-dup and decontamination operators must agree with
+their batch forms.
 """
 
 from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
-
-from financial_anomaly_detection_spark.schemas import TRANSACTION_SCHEMA
-
-TX = [
-    ("1001", "2025-05-01T02:10:00Z", "100", "501", 12000.0, "card", "Mutare"),
-    ("1002", "2025-05-01T08:00:00Z", "100", "501", 150.0, "pos", "Harare"),
-    ("1003", "2025-05-01T09:00:00Z", "101", "502", 800.0, "mobile_money", "Gweru"),
-    ("1009", "2025-05-03T04:00:00Z", "100", "501", 300.0, "pos", "Harare"),
-    ("1010", "2025-05-03T05:00:00Z", "102", "503", 70.25, "card", "Bulawayo"),
-]
-
-
-def _write_batches(src, batches):
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        with open(src / f"b{i}.json", "w") as f:
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "timestamp": r[1],
-                            "transaction_id": r[0],
-                            "customer_id": r[2],
-                            "merchant_id": r[3],
-                            "amount": r[4],
-                            "channel": r[5],
-                            "location": r[6],
-                        }
-                    )
-                    + "\n"
-                )
-
-
-def test_transform_with_state_unavailable_raises_clearly(spark):
-    """Without protobuf the raw API dies with an opaque 'driver worker
-    crashed'; our wrapper must fail fast with the actionable message
-    (and point at the applyInPandasWithState fallback)."""
-    from financial_anomaly_detection_spark.streaming import stateful_v2 as sv2
-
-    if sv2.TWS_AVAILABLE:
-        pytest.skip("protobuf present; the unavailable path can't fire")
-    # the guard fires before the stream is touched, so any frame works
-    with pytest.raises(ImportError, match="protobuf"):
-        sv2.profile_stream_v2(spark.range(1))
-
-
-def test_transform_with_state_profiles_match_batch(spark, tmp_path):
-    from financial_anomaly_detection_spark.streaming import stateful_v2 as sv2
-
-    if not sv2.TWS_AVAILABLE:
-        pytest.skip(
-            "transformWithStateInPandas needs the protobuf package "
-            "(absent in this container; no installs allowed) — "
-            "stateful parity is covered by the applyInPandasWithState "
-            "form in test_streaming.py"
-        )
-    profile_stream_v2 = sv2.profile_stream_v2
-
-    src = tmp_path / "txs_v2"
-    _write_batches(src, [TX[:2], TX[2:]])
-    stream = (
-        spark.readStream.schema(TRANSACTION_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        profile_stream_v2(stream)
-        .writeStream.format("memory")
-        .queryName("profiles_v2")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_v2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    final = {}
-    for r in spark.sql("select * from profiles_v2").collect():
-        final[r["customer_id"]] = r  # last emit per key wins
-
-    # batch truth in the same integer-cents arithmetic
-    batch = (
-        spark.createDataFrame(
-            [(r[2], r[4]) for r in TX], "customer_id string, amount double"
-        )
-        .groupBy("customer_id")
-        .agg(
-            F.sum(F.floor(F.col("amount") * 100 + F.lit(0.5)).cast("long")).alias("cents"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .collect()
-    )
-    assert len(final) == len(batch) == 3
-    for b in batch:
-        got = final[b["customer_id"]]
-        assert got["cust_txn_count"] == b["cnt"]
-        assert got["cust_avg_amount"] == b["cents"] / 100.0 / b["cnt"]
 
 
 def test_python_datasource_synthetic_transactions(spark):
