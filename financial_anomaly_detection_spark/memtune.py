@@ -30,12 +30,16 @@ measured and rejected for the JVM side of the same host:
   ~1.6x.
 
 Because env vars exported before ``getOrCreate()`` are inherited by
-the JVM and everything it forks, this module does NOT export any —
-the driver is tuned via a direct ``mallopt`` call
-(``session.get_spark``), and each worker-side kernel closure carries a
-three-line inline mallopt preamble (the closures are deliberately
-self-contained — workers never import this package — so they cannot
-call :func:`tune_malloc` by reference).
+the JVM and everything it forks, this module does NOT export any.
+The tuning exists in two places:
+
+* :func:`tune_malloc`, called by the driver (``session.get_spark``)
+  and by the warm-fork worker daemon (``pydaemon.py``) before its fork
+  loop, so every forked worker inherits it;
+* the inline preamble of the one Arrow kernel builder
+  (``ml/kernel.numpy_kernel``), for workers that run without the
+  daemon and cannot import this package (a plain ``SparkSession``), so
+  they cannot call :func:`tune_malloc` by reference.
 
 Everything here is a no-op on non-glibc platforms (the ctypes lookup
 is wrapped) and is idempotent. On a multi-tenant cluster these values
@@ -65,9 +69,8 @@ def tune_malloc() -> bool:
     """Apply the malloc tuning to the CURRENT process. Idempotent;
     returns True when mallopt was reachable and accepted the values.
 
-    Call this at the top of every worker-side kernel (pandas_udf /
-    mapInPandas closure): the first call per worker process does the
-    work, later calls return immediately.
+    The first call per process does the work, later calls return
+    immediately.
     """
     global _tuned
     if _tuned:
@@ -84,18 +87,3 @@ def tune_malloc() -> bool:
         _tuned = False
     return _tuned
 
-
-KERNEL_PREAMBLE = """\
-import ctypes
-try:
-    _lc = ctypes.CDLL(None)
-    _lc.mallopt(-3, 1 << 29), _lc.mallopt(-1, 1 << 30), _lc.mallopt(-2, 1 << 28)
-except Exception:
-    pass
-"""
-# ^ Documentation of the inline snippet each self-contained worker
-# kernel embeds (ml/lof.py, ml/iforest.py, ...). Kept here as the
-# single written-down source so the copies stay in sync; the constants
-# are (M_MMAP_THRESHOLD 512 MiB, M_TRIM_THRESHOLD 1 GiB,
-# M_TOP_PAD 256 MiB) as above — mallopt takes c_int, so the shifted
-# literals stay below 2**31.

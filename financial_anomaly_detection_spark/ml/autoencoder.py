@@ -12,7 +12,7 @@ parity studies:
     MLP autoencoder with a from-scratch Adam loop. Fully deterministic
     under the seed (fixed init, fixed shuffle order).
   * **score**: weights broadcast; reconstruction MSE per Arrow batch
-    is a couple of matmuls in a self-contained pandas_udf.
+    is a couple of matmuls in the ``kernel.numpy_kernel`` pandas_udf.
   * threshold = P97.5 of validation MSE (M9), serving score =
     ``clip(mse/threshold, 0, 1)`` (model_wrapper.py:44-49).
 """
@@ -20,10 +20,10 @@ parity studies:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
-from .sampling import as_array, collect_sample
+from .kernel import numpy_kernel
+from .sampling import collect_sample
 
 
 def _forward(params: list[np.ndarray], X: np.ndarray) -> tuple[list[np.ndarray], np.ndarray]:
@@ -125,30 +125,17 @@ class AutoencoderScorer:
     def mse_col(self, df: DataFrame, features_col: str = "features") -> Column:
         if self.params is None:
             raise RuntimeError("fit() first")
-        b = df.sparkSession.sparkContext.broadcast([p.copy() for p in self.params])
 
-        # self-contained UDF: only numpy + broadcast arrays cross the wire
-        @F.pandas_udf(T.DoubleType())
-        def _mse(batch: pd.Series) -> pd.Series:
-            # allocator preamble (memtune.KERNEL_PREAMBLE rationale)
-            import ctypes
-
-            try:
-                _lc = ctypes.CDLL(None)
-                _lc.mallopt(-3, 1 << 29), _lc.mallopt(-1, 1 << 30), _lc.mallopt(-2, 1 << 28)
-            except Exception:
-                pass
-            params = b.value
-            X = np.stack(batch.to_numpy())
+        def _mse(X: np.ndarray, *params: np.ndarray) -> np.ndarray:
             h = X
             n_layers = len(params) // 2
             for i in range(n_layers):
                 h = h @ params[2 * i] + params[2 * i + 1]
                 if i < n_layers - 1:
                     h = np.maximum(h, 0.0)
-            return pd.Series(((X - h) ** 2).mean(axis=1))
+            return ((X - h) ** 2).mean(axis=1)
 
-        return _mse(as_array(df, features_col))
+        return numpy_kernel(df, features_col, tuple(self.params), _mse)
 
     def score_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """clip(mse/threshold, 0, 1) — M10/F9."""

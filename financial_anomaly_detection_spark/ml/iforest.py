@@ -28,10 +28,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
-from .sampling import MAX_POOL, as_array, collect_sample
+from .kernel import numpy_kernel
+from .sampling import MAX_POOL, collect_sample
 
 
 def _c_factor(n: int) -> float:
@@ -145,27 +145,10 @@ class IsolationForestModel:
         """Anomaly score s(x) ∈ (0,1], higher = more anomalous."""
         if self.trees is None:
             raise RuntimeError("fit() first")
-        sc = df.sparkSession.sparkContext
-        b_trees = sc.broadcast(self.trees)
-        c_psi = self._c_psi
-        n_trees = self.n_estimators
 
-        # Self-contained UDF: references only numpy/pandas and the
-        # broadcast of plain arrays, so Python workers never need to
-        # import this package (they run with arbitrary cwd/sys.path).
-        @F.pandas_udf(T.DoubleType())
-        def _score(batch: pd.Series) -> pd.Series:
-            # allocator preamble (memtune.KERNEL_PREAMBLE rationale)
-            import ctypes
-
-            try:
-                _lc = ctypes.CDLL(None)
-                _lc.mallopt(-3, 1 << 29), _lc.mallopt(-1, 1 << 30), _lc.mallopt(-2, 1 << 28)
-            except Exception:
-                pass
-            X = np.stack(batch.to_numpy())
+        def _score(X: np.ndarray, trees: list, c_psi: float, n_trees: int) -> np.ndarray:
             total = np.zeros(len(X), dtype=np.float64)
-            for feature, threshold, left, right, leaf_value in b_trees.value:
+            for feature, threshold, left, right, leaf_value in trees:
                 node = np.zeros(len(X), dtype=np.int32)
                 active = feature[node] >= 0
                 while active.any():
@@ -176,9 +159,11 @@ class IsolationForestModel:
                     active = feature[node] >= 0
                 total += leaf_value[node]
             avg_path = total / n_trees
-            return pd.Series(np.power(2.0, -avg_path / c_psi))
+            return np.power(2.0, -avg_path / c_psi)
 
-        return _score(as_array(df, features_col))
+        return numpy_kernel(
+            df, features_col, (self.trees, self._c_psi, self.n_estimators), _score
+        )
 
     def decision_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """sklearn-convention decision score: higher = more normal

@@ -25,10 +25,10 @@ Conventions: ``lof`` ≈ 1 for inliers, > 1 for outliers.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
-from .sampling import as_array, collect_sample
+from .kernel import numpy_kernel
+from .sampling import collect_sample
 
 
 class LOFNoveltyModel:
@@ -47,6 +47,10 @@ class LOFNoveltyModel:
         """Fit from an already-collected sample pool (shared with the
         other scorers by the ensemble): a seeded uniform subset of at
         most ``max_train`` rows becomes the reference set."""
+        if len(pool) < 2:
+            raise ValueError(
+                f"LOFNoveltyModel.fit: needs at least 2 rows to fit, got {len(pool)}"
+            )
         if len(pool) > self.max_train:
             rng = np.random.default_rng(self.seed)
             idx = np.sort(rng.choice(len(pool), size=self.max_train, replace=False))
@@ -93,32 +97,17 @@ class LOFNoveltyModel:
         """LOF of each row vs the training reference set (novelty)."""
         if self.X_train is None:
             raise RuntimeError("fit() first")
-        sc = df.sparkSession.sparkContext
-        b = sc.broadcast((self.X_train, self.kdist_train, self.lrd_train))
         k = min(self.n_neighbors, len(self.X_train) - 1)
 
-        # Self-contained UDF (no references into this package — Python
-        # workers can't import it); distances inlined as one matmul.
         # kNN selection happens on SQUARED distances (sqrt is monotone,
         # so the neighbor set is identical) and sqrt is applied only to
         # the k selected columns; rows are processed in sub-chunks so
         # the chunk × reference-set distance matrix stays ~80 MB even
         # at the default 10k-row Arrow batch (the full-batch form
         # allocated ~400 MB of temps per batch × one per core).
-        @F.pandas_udf(T.DoubleType())
-        def _lof(batch: pd.Series) -> pd.Series:
-            # Allocator tuning for slow-first-touch hosts (memtune.py
-            # rationale) — inlined because this closure must stay
-            # self-contained; 3 cheap libc calls per batch.
-            import ctypes
-
-            try:
-                _lc = ctypes.CDLL(None)
-                _lc.mallopt(-3, 1 << 29), _lc.mallopt(-1, 1 << 30), _lc.mallopt(-2, 1 << 28)
-            except Exception:
-                pass
-            Xt, kdist, lrd = b.value
-            X = np.stack(batch.to_numpy())
+        def _lof(
+            X: np.ndarray, Xt: np.ndarray, kdist: np.ndarray, lrd: np.ndarray, k: int
+        ) -> np.ndarray:
             Xt_sq = (Xt * Xt).sum(axis=1)[None, :]
             out = np.empty(len(X), dtype=np.float64)
             # Small chunks on purpose: the (step, |ref|) temporaries are
@@ -139,9 +128,10 @@ class LOFNoveltyModel:
                 out[i : i + step] = lrd[nn_idx].mean(axis=1) / np.maximum(
                     lrd_x, 1e-12
                 )
-            return pd.Series(out)
+            return out
 
-        return _lof(as_array(df, features_col))
+        state = (self.X_train, self.kdist_train, self.lrd_train, k)
+        return numpy_kernel(df, features_col, state, _lof)
 
     def decision_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """sklearn-shaped decision score (higher = more normal)."""

@@ -20,9 +20,9 @@ the (d × k) component matrix broadcast.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
+from .kernel import numpy_kernel
 from .sampling import MAX_POOL, as_array, collect_sample
 
 # The reference calibrates at the validation P97.5 (train.py:86-88).
@@ -107,27 +107,15 @@ class ReconstructionScorer:
                 psq = proj * proj
                 captured = psq if captured is None else captured + psq
             return F.greatest(total - captured, F.lit(0.0)) / F.lit(float(d))
-        sc = df.sparkSession.sparkContext
-        b = sc.broadcast((self.components, self.mean))
 
-        @F.pandas_udf(T.DoubleType())
-        def _mse(batch: pd.Series) -> pd.Series:
-            # allocator preamble (memtune.KERNEL_PREAMBLE rationale)
-            import ctypes
-
-            try:
-                _lc = ctypes.CDLL(None)
-                _lc.mallopt(-3, 1 << 29), _lc.mallopt(-1, 1 << 30), _lc.mallopt(-2, 1 << 28)
-            except Exception:
-                pass
-            W, mu = b.value
-            X = np.stack(batch.to_numpy()) - mu
+        def _mse(X: np.ndarray, W: np.ndarray, mu: np.ndarray) -> np.ndarray:
+            X = X - mu
             total = (X * X).sum(axis=1)
             proj = X @ W
             captured = (proj * proj).sum(axis=1)
-            return pd.Series(np.maximum(total - captured, 0.0) / X.shape[1])
+            return np.maximum(total - captured, 0.0) / X.shape[1]
 
-        return _mse(as_array(df, features_col))
+        return numpy_kernel(df, features_col, (self.components, self.mean), _mse)
 
     def score_col(self, df: DataFrame, features_col: str = "features") -> Column:
         """Normalized AE-style score: clip(mse / threshold, 0, 1)

@@ -36,20 +36,7 @@ must never take down the daemon (no workers would start at all).
 
 from __future__ import annotations
 
-import ctypes
-
-
-def _tune_malloc_inline() -> None:
-    """memtune.py's mallopt tuning, inlined so the daemon does not need
-    the package's import side effects before the fork loop; children
-    inherit the tuned allocator parameters across fork."""
-    try:
-        libc = ctypes.CDLL(None)
-        libc.mallopt(ctypes.c_int(-3), ctypes.c_int(512 * 1024 * 1024))  # M_MMAP_THRESHOLD
-        libc.mallopt(ctypes.c_int(-1), ctypes.c_int(1024 * 1024 * 1024))  # M_TRIM_THRESHOLD
-        libc.mallopt(ctypes.c_int(-2), ctypes.c_int(256 * 1024 * 1024))  # M_TOP_PAD
-    except Exception:
-        pass
+from .memtune import tune_malloc
 
 
 def _preload() -> None:
@@ -91,7 +78,7 @@ def _preload() -> None:
             pass
 
 
-_tune_malloc_inline()
+tune_malloc()
 _preload()
 
 # Activation beacon for tests: the daemon process is invisible to the

@@ -81,9 +81,10 @@ def get_spark(
     cluster's own master config.
     """
     # Allocator tuning (memtune.py) for the DRIVER process only —
-    # worker-side kernels carry their own inline mallopt preamble, and
-    # the JVM is deliberately left untouched (see memtune.py for the
-    # measured reasons).
+    # workers get it from the warm-fork daemon or, without it, from the
+    # one kernel builder's preamble (ml/kernel.py); the JVM is
+    # deliberately left untouched (see memtune.py for the measured
+    # reasons).
     tune_malloc()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

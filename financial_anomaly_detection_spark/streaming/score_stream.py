@@ -37,22 +37,25 @@ from ..operators.profiles import with_profiles
 def split_valid_invalid(tx: DataFrame) -> Tuple[DataFrame, DataFrame]:
     """W7/P4/P5: the reference rejects records via pydantic validators
     (app.py:69-79) and isolates per-record errors (app.py:272-280).
-    Engine form: one predicate splits the plan; invalid rows flow to a
-    rejects sink instead of raising."""
-    is_valid = (
-        F.col("amount").isNotNull()
-        & (F.col("amount") >= 0)
-        & F.col("transaction_id").cast("string").rlike("^[0-9]+$")
-        & F.try_to_timestamp("timestamp").isNotNull()
+    Engine form: the rules are one ordered, null-safe list; a row's
+    ``error`` is its first broken rule, valid rows are those with no
+    error, and invalid rows flow to a rejects sink instead of raising.
+    Every input row lands on exactly one side."""
+    rules = (
+        ("invalid_amount", F.col("amount").isNull() | (F.col("amount") < 0)),
+        (
+            "invalid_id",
+            ~F.coalesce(F.col("transaction_id").cast("string").rlike("^[0-9]+$"), F.lit(False)),
+        ),
+        ("invalid_timestamp", F.try_to_timestamp("timestamp").isNull()),
     )
-    tagged = tx.withColumn("_valid", is_valid)
-    invalid = tagged.filter(~F.col("_valid")).withColumn(
-        "error",
-        F.when(F.col("amount").isNull() | (F.col("amount") < 0), "invalid_amount")
-        .when(~F.col("transaction_id").cast("string").rlike("^[0-9]+$"), "invalid_id")
-        .otherwise("invalid_timestamp"),
-    )
-    return tagged.filter(F.col("_valid")).drop("_valid"), invalid.drop("_valid")
+    (name, broken), *rest = rules
+    error = F.when(broken, name)
+    for name, broken in rest:
+        error = error.when(broken, name)
+    tagged = tx.withColumn("error", error)
+    valid = tagged.filter(F.col("error").isNull()).drop("error")
+    return valid, tagged.filter(F.col("error").isNotNull())
 
 
 def build_scoring_stream(

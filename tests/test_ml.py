@@ -203,18 +203,21 @@ def test_ensemble_fit_transform_equals_fit_then_transform(spark, sf_dir):
     assert a == b
 
 
-def test_iforest_empty_fit_raises(spark):
-    """Fitting on an empty pool must fail loudly (ValueError), not with
-    an opaque zero-length-array IndexError."""
-    empty = spark.createDataFrame([], "features array<double>")
-    with pytest.raises(ValueError, match="no rows"):
-        IsolationForestModel(seed=1).fit(empty, "features")
-
-
-def test_reconstruction_empty_fit_raises(spark):
-    empty = spark.createDataFrame([], "features array<double>")
-    with pytest.raises(ValueError, match="ReconstructionScorer.*no rows"):
-        ReconstructionScorer().fit(empty, "features")
+@pytest.mark.parametrize(
+    "scorer, n_rows",
+    [
+        (IsolationForestModel, 0),
+        (ReconstructionScorer, 0),
+        (LOFNoveltyModel, 0),
+        (LOFNoveltyModel, 1),
+    ],
+)
+def test_fit_on_too_few_rows_raises(spark, scorer, n_rows):
+    """Fitting on too few rows must fail with a ValueError naming the
+    scorer, not with an opaque numpy error from inside the fit."""
+    df = spark.createDataFrame([([1.0, 2.0],)] * n_rows, "features array<double>")
+    with pytest.raises(ValueError, match=f"{scorer.__name__}.fit"):
+        scorer().fit(df, "features")
 
 
 def test_distributed_lof_bounded_fanout_at_10x(spark):

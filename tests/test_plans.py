@@ -234,3 +234,23 @@ def test_every_package_definition_is_named_somewhere():
         if all(user is top for user in used.get(top.name, []))
     ]
     assert not dead, "named nowhere: " + ", ".join(dead)
+
+
+
+def test_one_allocator_tuning_and_one_ml_kernel_udf():
+    """The glibc allocator tuning is called only in
+    ``memtune.tune_malloc`` and the kernel builder ``ml/kernel.py``, and
+    nothing else under ``ml/`` uses ``pandas_udf`` — so a per-scorer
+    UDF or allocator preamble cannot come back."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "financial_anomaly_detection_spark"
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for top in ast.parse(path.read_text(), str(path)).body:
+            names = set(_names(top))
+            where = f"{rel}:{getattr(top, 'name', top.lineno)}"
+            if "mallopt" in names and where not in ("memtune.py:tune_malloc", "ml/kernel.py:numpy_kernel"):
+                stray.append(f"{where} calls mallopt")
+            if "pandas_udf" in names and rel.startswith("ml/") and rel != "ml/kernel.py":
+                stray.append(f"{where} uses pandas_udf")
+    assert not stray, "; ".join(stray)

@@ -60,14 +60,21 @@ def profiles(spark):
 
 
 def test_validity_split(spark):
-    valid, invalid = split_valid_invalid(_tx_df(spark, TX))
-    assert {r["transaction_id"] for r in valid.collect()} == {"1001", "1002", "1003"}
-    errs = {r["transaction_id"]: r["error"] for r in invalid.collect()}
+    """Each input lands on exactly one side. A null id is rejected as
+    ``invalid_id``: rlike on null is null, which neither a filter nor
+    its negation keeps."""
+    rows = TX + [(None, "2025-05-02T03:00:00Z", "103", "504", 60.0, "pos", "Harare")]
+    valid, invalid = split_valid_invalid(_tx_df(spark, rows))
+    valid, invalid = valid.collect(), invalid.collect()
+    assert {r["transaction_id"] for r in valid} == {"1001", "1002", "1003"}
+    errs = {r["transaction_id"]: r["error"] for r in invalid}
     assert errs == {
         "bad!": "invalid_id",
         "1004": "invalid_timestamp",
         "1005": "invalid_amount",
+        None: "invalid_id",
     }
+    assert sorted(r["timestamp"] for r in valid + invalid) == sorted(r[1] for r in rows)
 
 
 def test_stream_scores_match_batch(spark, tmp_path, profiles):
