@@ -1,4 +1,4 @@
-from .timefn import dow_pandas, time_features, to_utc_timestamp_coerce  # noqa: F401
+from .timefn import dow_pandas, time_features  # noqa: F401
 from .scoring import (  # noqa: F401
     clip01,
     deviation_ratio,

@@ -11,18 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def to_utc_timestamp_coerce(col: Column | str) -> Column:
-    """F1 — ``pd.to_datetime(ts, utc=True, errors='coerce')``
-    (reference train.py:38, app.py:82): parse or null, never raise.
-
-    ``try_to_timestamp`` (not ``to_timestamp``): Spark 4 runs ANSI mode
-    by default, where plain to_timestamp THROWS on malformed input —
-    the try_ variant is the coerce-to-null semantic. Session timezone
-    is pinned UTC by the engine session factory.
-    """
-    return F.try_to_timestamp(col)
-
-
 def dow_pandas(ts: Column | str) -> Column:
     """F3 — day-of-week in the pandas convention (Mon=0..Sun=6).
 

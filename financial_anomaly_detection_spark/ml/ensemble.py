@@ -45,9 +45,13 @@ MODEL_VERSION = "spark-ensemble-v1"
 AE_VARIANT = "pca"
 
 
-# Row-level parallelism is safe in every kernel here (all row-wise);
-# see operators/partitioning.py for why narrow inputs must be spread.
-from ..operators.partitioning import spread_narrow as _parallelize  # noqa: E402
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the default parallelism so the row-wise
+    Arrow kernels use every core. Unconditional: the feature frame comes
+    out of a window shuffle whose partition count AQE fixes only at run
+    time, so asking for it would run the upstream stages at plan-build
+    time (operators/partitioning.py)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 class AnomalyEnsemble:
@@ -101,7 +105,7 @@ class AnomalyEnsemble:
         # RELEASED when fit returns — all model state lives driver-side
         # after fitting, and leaked pins slowly squeeze execution memory
         # in long sessions.
-        feature_df = _parallelize(feature_df).persist()
+        feature_df = _spread(feature_df).persist()
         try:
             self.feature_model = build_feature_pipeline().fit(feature_df)
             # Pin the transformed features once too: the scorer fits
@@ -143,7 +147,7 @@ class AnomalyEnsemble:
         fusion -> risk bucket. Returns the ScoreOut shape."""
         if self.feature_model is None:
             raise RuntimeError("fit() first")
-        feats = _parallelize(self.feature_model.transform(feature_df))
+        feats = _spread(self.feature_model.transform(feature_df))
         return self._score_plan(feats, id_col)
 
     def _score_plan(self, feats: DataFrame, id_col: str) -> DataFrame:

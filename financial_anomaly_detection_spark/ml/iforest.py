@@ -124,10 +124,11 @@ class IsolationForestModel:
 
     def fit_pool(self, pool: np.ndarray) -> "IsolationForestModel":
         """Build the forest from an already-collected sample pool —
-        lets the ensemble share one pool collect across scorers."""
-        if len(pool) == 0:
+        lets the ensemble share one pool collect across scorers. A
+        1-row pool would make c(ψ) zero and every score 0/0."""
+        if len(pool) < 2:
             raise ValueError(
-                "IsolationForestModel.fit: no rows to fit (empty sample pool)"
+                f"IsolationForestModel.fit: needs at least 2 rows to fit, got {len(pool)}"
             )
         rng = np.random.default_rng(self.seed)
         psi = min(self.max_samples, len(pool))

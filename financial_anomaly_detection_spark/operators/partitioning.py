@@ -11,6 +11,13 @@ This is the repartition the multimodal module's design notes call for
 ("decode as a mapInPandas stage after a repartition sized so one Arrow
 batch of payloads fits executor memory") — centralized so every
 Python-kernel call site applies it consistently.
+
+The probe reads ``df.rdd.getNumPartitions()``. On a scan that is free,
+but under AQE a plan with an exchange gets its partition count only at
+run time, so probing it runs every upstream stage as a hidden Spark job
+while the plan is being built. The scoring core's feature frame comes
+out of a window shuffle, so it does not call the probe: ``ml/ensemble``
+repartitions that frame unconditionally.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.timefn import time_features, to_utc_timestamp_coerce
+from ..functions.timefn import time_features
 from ..ml.ensemble import AnomalyEnsemble
 from ..operators.profiles import with_window_profiles
 from ..sources.readers import read_transactions_csv
@@ -23,7 +23,10 @@ def prepare_transaction_features(tx: DataFrame) -> DataFrame:
     failures (P2), drop null amounts (P3), add the four time features
     (F1-F3), annotate per-customer/merchant whole-group stats (J3/A3
     window form), project the 10 feature columns + ids."""
-    ts = to_utc_timestamp_coerce("timestamp")
+    # F1, pd.to_datetime(utc=True, errors='coerce'): the session pins UTC,
+    # and try_ because Spark 4's ANSI mode makes plain to_timestamp throw
+    # on a malformed string.
+    ts = F.try_to_timestamp("timestamp")
     tf = time_features(ts)
     parsed = (
         tx.withColumn("ts", ts)

@@ -306,10 +306,10 @@ def _pretrained_ensemble(spark: SparkSession, sf_dir: str):
 def _pretrained_kernel_feats(spark: SparkSession, sf_dir: str):
     """Fitted ensemble + MLlib-transformed (and spread) feature frame —
     the common prefix every kernel twin shares with transform()."""
-    from ..operators.partitioning import spread_narrow
+    from ..ml.ensemble import _spread
 
     ens, feature_df = _pretrained_ensemble(spark, sf_dir)
-    return ens, spread_narrow(ens.feature_model.transform(feature_df))
+    return ens, _spread(ens.feature_model.transform(feature_df))
 
 
 # Constructed-PLAN cache for the pretrained bench twins: building the
@@ -356,12 +356,11 @@ def _md5_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig_0..sig_15): the md5-family MinHash signatures shared
     by q_minhash_exact_md5 and q_minhash_band_pairs_md5."""
     from ..operators.dedup import shingles_col
-    from ..operators.partitioning import spread_narrow
 
     # 16 md5 evaluations per shingle row land in the MAP-SIDE partial
-    # aggregate, which runs on the scan's partitioning — one small
-    # parquet file would serialize all of it onto one core.
-    docs = spread_narrow(load_table(spark, sf_dir, "documents"))
+    # aggregate, which runs on the scan's partitioning; load_table has
+    # already spread the one-file small-SF scan over every core.
+    docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.explode(shingles_col("text", 3)).alias("sh"),

@@ -512,9 +512,7 @@ def q_duplicate_chunks_across_docs(spark: SparkSession, sf_dir: str) -> DataFram
     tags=["text", "dedup", "llm-pipeline", "join"],
 )
 def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.partitioning import spread_narrow
-
-    d = spread_narrow(load_table(spark, sf_dir, "documents"))
+    d = load_table(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
     # <5-word docs: F.sequence(0, size-5) would DESCEND and slice(_, 0, _)
     # throws — clamp to an empty gram set (same guard as

@@ -84,9 +84,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ml_iforest_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.iforest import IsolationForestModel
-    from ..operators.partitioning import spread_narrow
 
-    emb = spread_narrow(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     model = IsolationForestModel(n_estimators=100, seed=42).fit(emb, "embedding")
     return emb.select(
         F.col("vec_id").cast("long"),
@@ -105,9 +104,8 @@ def q_ml_iforest_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ml_lof_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.lof import LOFNoveltyModel
-    from ..operators.partitioning import spread_narrow
 
-    emb = spread_narrow(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     model = LOFNoveltyModel(n_neighbors=20, seed=42).fit(emb, "embedding")
     return emb.select(
         F.col("vec_id").cast("long"),
@@ -125,9 +123,8 @@ def q_ml_lof_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ml_reconstruction_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.reconstruction import ReconstructionScorer
-    from ..operators.partitioning import spread_narrow
 
-    emb = spread_narrow(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     model = ReconstructionScorer(k=8).fit(emb, "embedding")
     return emb.select(
         F.col("vec_id").cast("long"),
@@ -147,9 +144,8 @@ def q_ml_reconstruction_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def q_ml_autoencoder_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.autoencoder import AutoencoderScorer
-    from ..operators.partitioning import spread_narrow
 
-    emb = spread_narrow(load_table(spark, sf_dir, "embeddings"))
+    emb = load_table(spark, sf_dir, "embeddings")
     model = AutoencoderScorer(hidden=(32, 8, 32), epochs=20, seed=42).fit(emb, "embedding")
     return emb.select(
         F.col("vec_id").cast("long"),

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 # a digits predicate (app.py:75-79) rather than coerced to ints.
 TRANSACTION_SCHEMA = T.StructType(
     [
-        T.StructField("timestamp", T.StringType()),  # parsed via F.to_timestamp (coerce->null)
+        T.StructField("timestamp", T.StringType()),  # parsed via F.try_to_timestamp (coerce->null)
         T.StructField("transaction_id", T.StringType()),
         T.StructField("customer_id", T.StringType()),
         T.StructField("merchant_id", T.StringType()),

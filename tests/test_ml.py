@@ -207,6 +207,7 @@ def test_ensemble_fit_transform_equals_fit_then_transform(spark, sf_dir):
     "scorer, n_rows",
     [
         (IsolationForestModel, 0),
+        (IsolationForestModel, 1),
         (ReconstructionScorer, 0),
         (LOFNoveltyModel, 0),
         (LOFNoveltyModel, 1),

@@ -9,12 +9,14 @@ import ast
 import csv
 import pathlib
 import random
+import re
 from typing import Iterator
 
 import pytest
 from pyspark.sql import functions as F
 
 from financial_anomaly_detection_spark.plans.scoring_plan import (
+    prepare_transaction_features,
     score_transactions,
     train_from_csv,
 )
@@ -131,7 +133,62 @@ def test_train_raises_on_empty_csv(spark, tmp_path):
         train_from_csv(spark, str(p), str(tmp_path / "m"))
 
 
-def test_benchmark_reaches_its_product_names(spark, tx_csv, monkeypatch):
+def test_building_a_scoring_plan_runs_no_spark_job(spark, tx_csv, trained, tmp_path):
+    """Plan construction is lazy: the batch plan, the ensemble's kernel
+    plan and the stream plan are each built without one Spark job (a
+    partition probe on the window's shuffle output would run its
+    upstream stages)."""
+    from financial_anomaly_detection_spark.operators.profiles import (
+        customer_profile,
+        merchant_profile,
+    )
+    from financial_anomaly_detection_spark.sources.readers import (
+        read_transactions_json_stream,
+    )
+    from financial_anomaly_detection_spark.streaming.score_stream import (
+        build_scoring_stream,
+    )
+
+    ens, _ = trained
+    sc = spark.sparkContext
+    tx = read_transactions_csv(spark, tx_csv)
+    features = prepare_transaction_features(tx)
+    stream = read_transactions_json_stream(spark, str(tmp_path))
+    anchor = "2025-06-01 00:00:00"
+
+    def jobs_run_by(build, group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    plans = {
+        "score_transactions": lambda: score_transactions(spark, tx, ensemble=ens),
+        "ensemble_transform": lambda: ens.transform(features, id_col="transaction_id"),
+        "build_scoring_stream": lambda: build_scoring_stream(
+            stream, customer_profile(tx, anchor), merchant_profile(tx, anchor)
+        ),
+    }
+    ran = {name: jobs_run_by(build, f"plan-build-{name}") for name, build in plans.items()}
+    assert ran == {name: [] for name in plans}
+    # not vacuous: an action run inside a job group is counted
+    assert jobs_run_by(lambda: tx.limit(1).collect(), "plan-build-action")
+
+
+def _exchanges(df) -> list[str]:
+    """The Exchange nodes of ``df``'s physical plan, top down, with
+    expression ids stripped."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"#\d+|\[plan_id=\d+\]", "", line[line.index("Exchange"):]).strip()
+        for line in plan.splitlines()
+        if "Exchange" in line
+    ]
+
+
+def test_benchmark_reaches_its_product_names(spark, tx_csv, trained, monkeypatch):
     """perfbench/workloads.py imports these names and instruments these
     methods; a refactor that renames one must fail here, not at
     benchmark time."""
@@ -175,9 +232,26 @@ def test_benchmark_reaches_its_product_names(spark, tx_csv, monkeypatch):
     for scorer, method in ((ens.iforest, "decision_col"), (ens.lof, "decision_col"), (ens.recon, "score_col")):
         assert callable(getattr(scorer, method))
 
+    # The kernels run spread over every core: a round-robin exchange
+    # sits between the window's shuffle and the Arrow kernels. The
+    # traced run's prefix (spread_narrow over the MLlib transform)
+    # plans the same exchanges, so its per-layer numbers describe the
+    # product.
+    from financial_anomaly_detection_spark.operators.partitioning import spread_narrow
+
+    tx = read_transactions_csv(spark, tx_csv)
+    trained_ens, _ = trained
+    features = scoring_plan.prepare_transaction_features(tx)
+    scored = trained_ens.transform(features, id_col="transaction_id")
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    spread = f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})"
+    assert plan.index("ArrowEvalPython") < plan.index(spread) < plan.index("Window")
+    prefix = spread_narrow(trained_ens.feature_model.transform(features))
+    assert _exchanges(prefix) == _exchanges(scored)
+    assert any(spread in e for e in _exchanges(prefix))
+
     # The traced run times the window stage by patching the module
     # global; prepare_transaction_features must look it up there.
-    tx = read_transactions_csv(spark, tx_csv)
     assert "cust_avg_amount" in scoring_plan.prepare_transaction_features(tx).columns
     monkeypatch.setattr(scoring_plan, "with_window_profiles", lambda df: df)
     assert "cust_avg_amount" not in scoring_plan.prepare_transaction_features(tx).columns
