@@ -54,9 +54,18 @@ def with_profiles(
 
     Both profiles are broadcast: they are bounded by key cardinality,
     facts are not, so the fact side is never reshuffled.
+
+    Each side is broadcast from ``coalesce(1)``. A profile out of a
+    ``groupBy`` has ``spark.sql.shuffle.partitions`` partitions, and a
+    stream re-runs both broadcasts every micro-batch: without the
+    coalesce, each batch runs two jobs of one task per partition to
+    re-read a few thousand cached rows. The coalesce is narrow, so a
+    cached profile is read from its cached blocks; an uncached one would
+    compute its final aggregate in one task per batch, so callers cache
+    their profiles.
     """
-    out = tx.join(F.broadcast(cust_profile), on="customer_id", how="left").join(
-        F.broadcast(merch_profile), on="merchant_id", how="left"
+    out = tx.join(F.broadcast(cust_profile.coalesce(1)), on="customer_id", how="left").join(
+        F.broadcast(merch_profile.coalesce(1)), on="merchant_id", how="left"
     )
     return out.na.fill(
         0.0, subset=["cust_avg_amount", "cust_txn_count", "merch_avg_amount"]

@@ -7,10 +7,12 @@ The reference persists one row per scored transaction into MySQL
   * batch: ``write_scores_parquet`` / ``write_scores_jdbc`` — bulk
     appends, partitioned by score date so downstream reads prune.
   * streaming: ``foreach_batch_parquet`` — a foreachBatch hook doing
-    the same bulk append per micro-batch. This is AT-LEAST-once, not
-    exactly-once: Spark replays a batch whose write finished but whose
-    commit-log entry did not, and the replay appends its rows a second
-    time. An idempotent sink keyed by ``batch_id`` is ROADMAP item 3.
+    the same bulk write per micro-batch, exactly-once with a replayable
+    source: Spark replays a batch whose write finished but whose
+    commit-log entry did not, with the same ``batch_id`` and the same
+    input, and each batch overwrites its own ``batch_id=<id>``
+    directory, so the replay replaces the first write instead of adding
+    to it.
 
 JDBC is code-path-complete but exercised only when a JDBC URL is
 supplied (no database ships in the test container).
@@ -46,12 +48,16 @@ def write_scores_jdbc(
 
 
 def foreach_batch_parquet(path: str):
-    """S4, streaming: foreachBatch hook appending each micro-batch to
-    a parquet log — use as ``writeStream.foreachBatch(...)``."""
+    """S4, streaming: foreachBatch hook writing each micro-batch to a
+    parquet log — use as ``writeStream.foreachBatch(...)``.
+
+    Batch ``id`` goes to ``path/batch_id=<id>`` with mode ``overwrite``,
+    so a replayed batch replaces its earlier write; reading ``path``
+    yields the ``batch_id`` column by partition discovery."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        with_sink_timestamp(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(path)
+        with_sink_timestamp(batch_df).write.mode("overwrite").parquet(
+            f"{path}/batch_id={batch_id}"
+        )
 
     return _write

@@ -132,9 +132,20 @@ def test_jdbc_derby_roundtrip(spark, tmp_path):
     assert part.count() == 3
 
 
+def _plan_nodes(node):
+    """Every node of a physical plan tree (a py4j ``SparkPlan``)."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
 def test_with_profiles_broadcast_valve(spark, sf_dir):
     """The profile-enrichment join broadcasts both profiles (they are
-    key-bounded) even when size-based auto-broadcast is off."""
+    key-bounded) even when size-based auto-broadcast is off, and each
+    broadcast side reads its cached profile through ``Coalesce 1``: one
+    task per broadcast, not one per shuffle partition, with no
+    exchange between the broadcast and the cache."""
     from financial_anomaly_detection_spark.operators.profiles import (
         customer_profile,
         merchant_profile,
@@ -148,17 +159,29 @@ def test_with_profiles_broadcast_valve(spark, sf_dir):
         F.col("ts").alias("timestamp"),
     )
     anchor = "2024-04-01 00:00:00"
-    cp = customer_profile(ev, anchor=anchor)
-    mp = merchant_profile(ev, anchor=anchor)
+    cp = customer_profile(ev, anchor=anchor).cache()
+    mp = merchant_profile(ev, anchor=anchor).cache()
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         bcast = with_profiles(ev, cp, mp)
-        plan_b = bcast._jdf.queryExecution().executedPlan().toString()
+        executed = bcast._jdf.queryExecution().executedPlan()
+        plan_b = executed.toString()
         assert "BroadcastHashJoin" in plan_b
         assert "SortMergeJoin" not in plan_b and "ShuffledHashJoin" not in plan_b
+        if executed.nodeName() == "AdaptiveSparkPlan":
+            executed = executed.executedPlan()
+        sides = [n.child() for n in _plan_nodes(executed) if n.nodeName() == "BroadcastExchange"]
+        assert len(sides) == 2
+        for side in sides:
+            assert side.nodeName() == "Coalesce" and side.numPartitions() == 1, side.toString()
+            below = [n.nodeName() for n in _plan_nodes(side)]
+            assert "InMemoryTableScan" in below, side.toString()
+            assert not [n for n in below if "Exchange" in n], side.toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        cp.unpersist()
+        mp.unpersist()
 
 
 def test_ngram_jaccard_broadcast_valve(spark, sf_dir):

@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from financial_anomaly_detection_spark.schemas import TRANSACTION_SCHEMA
+from financial_anomaly_detection_spark.sources.readers import read_transactions_json_stream
+from financial_anomaly_detection_spark.sources.sinks import foreach_batch_parquet
 from financial_anomaly_detection_spark.streaming.score_stream import (
     build_scoring_stream,
     split_valid_invalid,
@@ -77,32 +79,37 @@ def test_validity_split(spark):
     assert sorted(r["timestamp"] for r in valid + invalid) == sorted(r[1] for r in rows)
 
 
+def _land_json(path, rows) -> None:
+    """Write ``rows`` as one JSON-lines file (the REST-body analog, S5)."""
+    with open(path, "w") as f:
+        for r in rows:
+            f.write(
+                json.dumps(
+                    {
+                        "timestamp": r[1],
+                        "transaction_id": r[0],
+                        "customer_id": r[2],
+                        "merchant_id": r[3],
+                        "amount": r[4],
+                        "channel": r[5],
+                        "location": r[6],
+                    }
+                )
+                + "\n"
+            )
+
+
 def test_stream_scores_match_batch(spark, tmp_path, profiles):
+    """A standing backlog is served as one micro-batch, and its rows
+    equal the same plan on a static frame: a row's score does not
+    depend on its batch-mates."""
     cust, merch = profiles
-    # write the transactions as JSON files (the REST-body analog, S5)
     src = tmp_path / "txs"
     src.mkdir()
     for i, r in enumerate(TX[:3]):
-        with open(src / f"{i}.json", "w") as f:
-            json.dump(
-                {
-                    "timestamp": r[1],
-                    "transaction_id": r[0],
-                    "customer_id": r[2],
-                    "merchant_id": r[3],
-                    "amount": r[4],
-                    "channel": r[5],
-                    "location": r[6],
-                },
-                f,
-            )
+        _land_json(src / f"{i}.json", [r])
 
-    stream = (
-        spark.readStream.schema(TRANSACTION_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    scored_stream = build_scoring_stream(stream, cust, merch)
+    scored_stream = build_scoring_stream(read_transactions_json_stream(spark, str(src)), cust, merch)
     q = (
         scored_stream.writeStream.format("memory")
         .queryName("scored")
@@ -111,6 +118,7 @@ def test_stream_scores_match_batch(spark, tmp_path, profiles):
         .start()
     )
     q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [3]
 
     stream_rows = {
         r["transaction_id"]: r for r in spark.sql("select * from scored").collect()
@@ -128,28 +136,58 @@ def test_stream_scores_match_batch(spark, tmp_path, profiles):
     assert stream_rows["1001"]["model_version"] == "unavailable"  # W6 fallback
 
 
+def test_sink_replay_after_crash_writes_each_row_once(spark, tmp_path, profiles):
+    """A crash after a batch's write but before its commit-log entry
+    makes the restarted query replay that batch. The replay must
+    replace the batch's rows, not add to them: every input comes out
+    exactly once, across the replayed batch and the next one."""
+    cust, merch = profiles
+    src, out, ckpt = tmp_path / "txs", str(tmp_path / "out"), str(tmp_path / "ckpt")
+    src.mkdir()
+    ids = [str(2000 + i) for i in range(10)]
+    rows = [(t, "2025-05-01T08:00:00Z", "100", "501", 10.0 + i, "pos", "Harare") for i, t in enumerate(ids)]
+    for i in range(5):
+        _land_json(src / f"{i}.json", [rows[i]])
+    sink = foreach_batch_parquet(out)
+
+    def crash_after_write(batch_df, batch_id):
+        sink(batch_df, batch_id)
+        raise RuntimeError("crash after the write, before the commit")
+
+    def run(hook):
+        valid, _ = split_valid_invalid(read_transactions_json_stream(spark, str(src)))
+        return (
+            build_scoring_stream(valid, cust, merch)
+            .writeStream.foreachBatch(hook)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    q = run(crash_after_write)
+    with pytest.raises(Exception, match="crash after the write"):
+        q.awaitTermination(120)
+    assert spark.read.parquet(out).count() == 5  # batch 0 was written
+    for i in range(5, 10):
+        _land_json(src / f"{i}.json", [rows[i]])
+    q = run(sink)
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    got = spark.read.parquet(out).groupBy("transaction_id").agg(
+        F.count(F.lit(1)).alias("n"), F.collect_set("batch_id").alias("batches")
+    )
+    by_id = {r["transaction_id"]: (r["n"], sorted(r["batches"])) for r in got.collect()}
+    assert by_id == {t: (1, [0] if i < 5 else [1]) for i, t in enumerate(ids)}
+
+
 def test_stateful_profiles_accumulate_across_batches(spark, tmp_path):
     src = tmp_path / "txs2"
     src.mkdir()
     # batch 1: two tx for customer 100; batch 2: one more
     batches = [TX[:2], [("1009", "2025-05-03T04:00:00Z", "100", "501", 300.0, "pos", "Harare")]]
     for i, rows in enumerate(batches):
-        with open(src / f"b{i}.json", "w") as f:
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "timestamp": r[1],
-                            "transaction_id": r[0],
-                            "customer_id": r[2],
-                            "merchant_id": r[3],
-                            "amount": r[4],
-                            "channel": r[5],
-                            "location": r[6],
-                        }
-                    )
-                    + "\n"
-                )
+        _land_json(src / f"b{i}.json", rows)
 
     stream = (
         spark.readStream.schema(TRANSACTION_SCHEMA)
@@ -612,22 +650,7 @@ def test_stateful_profiles_on_rocksdb_state_store(spark, tmp_path):
         [("1009", "2025-05-03T04:00:00Z", "100", "501", 300.0, "pos", "Harare")],
     ]
     for i, rows in enumerate(batches):
-        with open(src / f"b{i}.json", "w") as f:
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "timestamp": r[1],
-                            "transaction_id": r[0],
-                            "customer_id": r[2],
-                            "merchant_id": r[3],
-                            "amount": r[4],
-                            "channel": r[5],
-                            "location": r[6],
-                        }
-                    )
-                    + "\n"
-                )
+        _land_json(src / f"b{i}.json", rows)
 
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     rocksdb = (
