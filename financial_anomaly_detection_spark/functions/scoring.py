@@ -25,7 +25,9 @@ RULE_LARGE_AMOUNT_T = 1000.0
 RULE_LARGE_AMOUNT_W = 0.6
 RULE_CARD_LOCATION_W = 0.3
 RULE_ODD_HOUR_W = 0.2
+CARD_CHANNEL = "card"
 USUAL_LOCATIONS = ("harare", "bulawayo")
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
 # Fusion weights (python_scoring/app.py:194 — note they sum to 1.45 and
 # the result is deliberately NOT clipped; quirk preserved for parity).
@@ -72,11 +74,18 @@ def _rule_conditions(
     Dockerfile ENV), so it is a parameter here too.
     """
     amount, hour = _c(amount), _c(hour)
-    channel, location = _c(channel), _c(location)
+    # Fold case with translate, not lower(): Spark 4.1's lower() goes
+    # through ICU, whose first call in a JVM runs a ~1.5-2 s class
+    # initializer that every other task of a cold pass waits on. The
+    # ASCII-only fold equals the reference's str.lower() here: the only
+    # non-ASCII characters whose str.lower() is ASCII are U+0130 (-> "i"
+    # plus a combining dot, still non-ASCII) and U+212A KELVIN SIGN
+    # (-> "k"), and no rule literal contains a "k".
+    channel, location = (F.translate(_c(x), _UPPER, _UPPER.lower()) for x in (channel, location))
     return [
         (amount > F.lit(large_amount_t), RULE_LARGE_AMOUNT_W, "large_amount"),
         (
-            (F.lower(channel) == "card") & ~F.lower(location).isin(*USUAL_LOCATIONS),
+            (channel == CARD_CHANNEL) & ~location.isin(*USUAL_LOCATIONS),
             RULE_CARD_LOCATION_W,
             "card_unusual_location",
         ),

@@ -1,5 +1,5 @@
 """The one Arrow kernel builder behind every numpy scorer (IForest, LOF,
-the large-d reconstruction MSE and the MLP autoencoder).
+the reconstruction MSE and the MLP autoencoder).
 
 ``numpy_kernel`` broadcasts the fitted state once per column build and
 wraps the scorer's numpy math in the package's only scorer

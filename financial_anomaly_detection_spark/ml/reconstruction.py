@@ -13,8 +13,9 @@ covariance, with the reconstruction error computed as
 — for an orthonormal component matrix W, the residual of the
 rank-k projection. The fit reads one bounded sample (the same
 discipline as IForest/LOF); the threshold is an exact distributed
-percentile; scoring is one matmul per Arrow batch in a pandas_udf with
-the (d × k) component matrix broadcast.
+percentile; scoring is one matmul per Arrow batch in the numpy kernel
+(``ml/kernel.numpy_kernel``) with the (d × k) component matrix
+broadcast, at every d.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .kernel import numpy_kernel
-from .sampling import MAX_POOL, as_array, collect_sample
+from .sampling import MAX_POOL, collect_sample
 
 # The reference calibrates at the validation P97.5 (train.py:86-88).
 THRESHOLD_QUANTILE = 0.975
@@ -81,32 +82,13 @@ class ReconstructionScorer:
         return self
 
     def mse_col(self, df: DataFrame, features_col: str = "features") -> Column:
-        """Per-row reconstruction MSE (A5).
-
-        Small d: a pure-Catalyst expression (centered squares minus the
-        rank-k projection energy) — stays inside whole-stage codegen,
-        no Python stage at all. Large d: one matmul per Arrow batch in
-        a pandas_udf with the (d, k) component matrix broadcast.
+        """Per-row reconstruction MSE (A5): one matmul per Arrow batch in
+        the package's numpy kernel, with the (d, k) component matrix
+        broadcast. The ensemble plans it in the same Python stage as
+        the IForest and LOF kernels.
         """
         if self.components is None:
             raise RuntimeError("fit() first")
-        arr0 = as_array(df, features_col)
-        d, k = self.components.shape
-        if d <= 32:
-            c = [arr0[i] - float(self.mean[i]) for i in range(d)]
-            total = None
-            for ci in c:
-                term = ci * ci
-                total = term if total is None else total + term
-            captured = None
-            for q in range(k):
-                proj = None
-                for i in range(d):
-                    term = c[i] * float(self.components[i, q])
-                    proj = term if proj is None else proj + term
-                psq = proj * proj
-                captured = psq if captured is None else captured + psq
-            return F.greatest(total - captured, F.lit(0.0)) / F.lit(float(d))
 
         def _mse(X: np.ndarray, W: np.ndarray, mu: np.ndarray) -> np.ndarray:
             X = X - mu

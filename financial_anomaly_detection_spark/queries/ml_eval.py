@@ -5759,7 +5759,7 @@ def q_ml_kernel_lof_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml_kernel_pca_exact",
     # Hash-level oracle surrogate for the reconstruction-MSE kernel
-    # (ml/reconstruction.py mse_col, large-d Arrow matmul path — the
+    # (ml/reconstruction.py mse_col, the Arrow matmul kernel — the
     # PCA analog of the reference autoencoder's MSE,
     # model_wrapper.py:44-49): injected exactly-orthonormal dyadic
     # components (disjoint ±1/4 supports) and an integer mean run

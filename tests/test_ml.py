@@ -71,8 +71,9 @@ def test_lof_ranks_planted_anomalies(spark, planted):
 
 
 def test_reconstruction_ranks_planted_anomalies(spark, planted):
-    # rank-2 structure + off-plane anomalies; d=64 takes mse_col's
-    # Arrow-kernel branch, DIM its Catalyst expression
+    # rank-2 structure + off-plane anomalies, at a small and a large d;
+    # both run mse_col's one Arrow kernel, which must equal the numpy
+    # residual formula
     for dim in (DIM, 64):
         rng = np.random.default_rng(11)
         basis = rng.normal(size=(2, dim))
@@ -88,6 +89,10 @@ def test_reconstruction_ranks_planted_anomalies(spark, planted):
         top = _top_ids(scored, "s", N_ANOM)
         assert top == set(range(N_NORMAL, N_NORMAL + N_ANOM)), dim
         assert model.threshold is not None and model.threshold >= 0
+        got = np.array([r["s"] for r in scored.orderBy("id").collect()])
+        C = np.vstack([normal, anom]) - model.mean
+        want = np.maximum((C * C).sum(axis=1) - ((C @ model.components) ** 2).sum(axis=1), 0.0) / dim
+        np.testing.assert_allclose(got, want, rtol=0, atol=1e-12, err_msg=str(dim))
 
 
 def test_ensemble_end_to_end_and_roundtrip(spark, sf_dir, tmp_path):

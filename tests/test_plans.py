@@ -177,6 +177,20 @@ def test_building_a_scoring_plan_runs_no_spark_job(spark, tx_csv, trained, tmp_p
     assert jobs_run_by(lambda: tx.limit(1).collect(), "plan-build-action")
 
 
+def test_ensemble_runs_its_three_kernels_in_one_python_stage(spark, tx_csv, trained):
+    """The IForest, LOF and reconstruction kernels share one
+    ``ArrowEvalPython``, and no kernel is unrolled into per-element
+    Column arithmetic over the feature vector."""
+    ens, _ = trained
+    features = prepare_transaction_features(read_transactions_csv(spark, tx_csv))
+    plan = ens.transform(features, id_col="transaction_id")._jdf.queryExecution().optimizedPlan().toString()
+    unrolled = re.findall(r"UDF\(features#\d+\)\[\d+\]", plan)
+    assert not unrolled, f"{len(unrolled)} per-element reads of the feature vector"
+    stages = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert len(stages) == 1, stages
+    assert all(f"{udf}(" in stages[0] for udf in ("_score", "_lof", "_mse")), stages[0]
+
+
 def _exchanges(df) -> list[str]:
     """The Exchange nodes of ``df``'s physical plan, top down, with
     expression ids stripped."""
@@ -328,3 +342,36 @@ def test_one_allocator_tuning_and_one_ml_kernel_udf():
             if "pandas_udf" in names and rel.startswith("ml/") and rel != "ml/kernel.py":
                 stray.append(f"{where} uses pandas_udf")
     assert not stray, "; ".join(stray)
+
+
+_ICU_CASE_MAPPINGS = {"lower", "upper", "initcap", "lcase", "ucase"}
+
+
+def _maps_case(call: ast.Call) -> bool:
+    """``call`` is ``F.lower(...)``, a bare ``lower(...)``, or passes SQL
+    text that calls one of the case mappings (``F.expr("lower(c)")``)."""
+    f = call.func
+    is_f = isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) and f.value.id == "F"
+    name = f.attr if is_f else getattr(f, "id", None)
+    sql = re.compile(r"\b(%s)\s*\(" % "|".join(_ICU_CASE_MAPPINGS), re.IGNORECASE)
+    return name in _ICU_CASE_MAPPINGS or any(
+        isinstance(a, ast.Constant) and isinstance(a.value, str) and sql.search(a.value) for a in call.args
+    )
+
+
+def test_no_icu_case_mapping_on_the_scoring_path():
+    """Spark 4.1's ``lower``/``upper``/``initcap`` go through ICU, whose
+    first call in a JVM stalls every task of a cold pass for ~1.5-2 s
+    on one class initializer; the scoring path folds case without
+    them (``functions/scoring._rule_conditions``)."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "financial_anomaly_detection_spark"
+    paths = [pkg / "functions/scoring.py", pkg / "streaming/score_stream.py", pkg / "plans/scoring_plan.py"]
+    paths += sorted((pkg / "ml").rglob("*.py"))
+    stray = {
+        f"{path.relative_to(pkg).as_posix()}:{getattr(top, 'name', top.lineno)}"
+        for path in paths
+        for top in ast.parse(path.read_text(), str(path)).body
+        for n in ast.walk(top)
+        if isinstance(n, ast.Call) and _maps_case(n)
+    }
+    assert not stray, "ICU case mapping in " + ", ".join(sorted(stray))

@@ -5,10 +5,15 @@ generates the rows; Spark evaluates the columns)."""
 
 from __future__ import annotations
 
+import itertools
+
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from financial_anomaly_detection_spark.functions.scoring import (
+    CARD_CHANNEL,
+    RULE_CARD_LOCATION_W,
+    USUAL_LOCATIONS,
     clip01,
     deviation_ratio,
     fuse_scores,
@@ -16,6 +21,7 @@ from financial_anomaly_detection_spark.functions.scoring import (
     high_amount_override,
     inv_sigmoid,
     risk_level,
+    rule_flags,
     rule_score,
 )
 
@@ -599,3 +605,37 @@ def test_python_winnow_kernel_matches_duckdb_on_arbitrary_whitespace(text):
     """
     duck_fps = set(con.execute(sql).fetchone()[0])
     assert winnow_fingerprints(text) == duck_fps, repr(text)
+
+
+def test_rules_fold_case_like_the_reference(spark):
+    """The card/location rule matches the reference's ``str.lower()``
+    comparisons (python_scoring/app.py:156-164) on mixed case, non-ASCII
+    letters, the two non-ASCII characters whose ``lower()`` has ASCII
+    in it (U+212A KELVIN SIGN -> "k", U+0130 -> "i" + combining dot)
+    and nulls."""
+    # the ASCII-only fold is exact because no rule literal has a "k"
+    assert "k" not in CARD_CHANNEL + "".join(USUAL_LOCATIONS)
+    channels = ["CARD", "Card", "card", "\u212aard", "c\u0130rd", "straße", "pos", None]
+    locations = [
+        "HARARE", "BuLaWaYo", "harare", "Gwéru", "HARÂRE", "straße",
+        "\u212aadoma", "Harar\u0130", "Mutare", None,
+    ]
+    rows = [(10.0, c, loc, 12) for c, loc in itertools.product(channels, locations)]
+    out = _eval(
+        spark, rows, "amount double, channel string, location string, hour int",
+        [
+            F.col("channel"),
+            F.col("location"),
+            rule_score("amount", "channel", "location", "hour").alias("r"),
+            rule_flags("amount", "channel", "location", "hour").alias("f"),
+        ],
+    )
+    assert len(out) == len(rows)
+    for r in out:
+        c, loc = r["channel"], r["location"]
+        hit = (
+            c is not None and loc is not None
+            and c.lower() == CARD_CHANNEL and loc.lower() not in USUAL_LOCATIONS
+        )
+        assert r["r"] == (RULE_CARD_LOCATION_W if hit else 0.0), (c, loc)
+        assert r["f"] == (["card_unusual_location"] if hit else []), (c, loc)
