@@ -30,13 +30,8 @@ def collect_sample(df: DataFrame, col: str, n: int, seed: int) -> np.ndarray:
     sample = df.select(as_array(df, col).alias("_x"))
     if frac < 1.0:
         sample = sample.sample(fraction=frac, seed=seed)
-    sample = sample.limit(n)
-    try:
-        # Arrow batch transfer: same rows in the same order as
-        # collect(), minus the per-Row pickle cost (~5x on a
-        # 100k-vector pool).
-        vals = sample.toPandas()["_x"].to_numpy()
-        return np.stack(vals).astype(np.float64) if len(vals) else np.empty((0, 0))
-    except Exception:
-        rows = sample.collect()
-        return np.array([r["_x"] for r in rows], dtype=np.float64)
+    # Arrow batch transfer: same rows in the same order as collect(),
+    # minus the per-Row pickle cost (~5x on a 100k-vector pool).
+    # toPandas falls back to rows itself when Arrow cannot convert.
+    vals = sample.limit(n).toPandas()["_x"].to_numpy()
+    return np.stack(vals).astype(np.float64) if len(vals) else np.empty((0, 0))

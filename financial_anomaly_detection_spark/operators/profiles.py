@@ -85,44 +85,3 @@ def with_window_profiles(tx: DataFrame) -> DataFrame:
         .withColumn("merch_avg_amount", F.avg("amount").over(mw))
     )
 
-
-def salted_group_stats(
-    df: DataFrame,
-    key: str,
-    amount: str,
-    n_salt: int = 32,
-    salt_src: str | None = None,
-) -> DataFrame:
-    """Two-phase salted (sum-cents, count) per key — the skew-safe form
-    of the profile aggregation for pathological keys (one user holding
-    a double-digit share of all events).
-
-    Phase 1 groups by (key, salt) so a hot key's rows spread over
-    ``n_salt`` reducers; phase 2 re-aggregates the bounded partials per
-    key. Integer-cents partials compose exactly, so the result is
-    bit-identical to the plain groupBy (tested), and ``avg = sum/n``
-    derived from them is bit-identical to any other exact-sum path.
-
-    Note Spark's partial hash aggregation already bounds reduce-side
-    load for plain sum/count; the salt matters when partial agg is
-    defeated (high-cardinality composite groupings, agg functions
-    without map-side combine) — and the same agg+join-back shape is
-    how a hot key escapes ``Window.partitionBy`` transforms, where ONE
-    task otherwise absorbs the whole group (see
-    ``with_window_profiles`` vs ``with_profiles``, SCALING.md skew
-    drill).
-    """
-    salt = F.pmod(
-        F.xxhash64(F.col(salt_src) if salt_src else F.col(amount)), F.lit(n_salt)
-    )
-    cents = F.floor(F.col(amount) * 100 + F.lit(0.5)).cast("long")
-    return (
-        df.withColumn("_salt", salt)
-        .groupBy(key, "_salt")
-        .agg(F.sum(cents).alias("_pc"), F.count(F.lit(1)).alias("_pn"))
-        .groupBy(key)
-        .agg(
-            F.sum("_pc").alias("sum_cents"),
-            F.sum("_pn").cast("long").alias("n_events"),
-        )
-    )

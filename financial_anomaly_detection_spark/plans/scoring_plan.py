@@ -20,9 +20,10 @@ from ..streaming.score_stream import split_valid_invalid
 
 def prepare_transaction_features(tx: DataFrame) -> DataFrame:
     """§3.2 steps 2-5 (train.py:38-62): coerce-parse timestamp and drop
-    failures (P2), drop null amounts (P3), add the four time features
-    (F1-F3), annotate per-customer/merchant whole-group stats (J3/A3
-    window form), project the 10 feature columns + ids."""
+    failures (P2), drop null amounts (P3), add ``ts`` and the four time
+    features (F1-F3), annotate per-customer/merchant whole-group stats
+    (J3/A3 window form). Every input column is kept; the ensemble's
+    feature pipeline picks its columns by name."""
     # F1, pd.to_datetime(utc=True, errors='coerce'): the session pins UTC,
     # and try_ because Spark 4's ANSI mode makes plain to_timestamp throw
     # on a malformed string.
@@ -54,22 +55,13 @@ def train_from_csv(spark: SparkSession, csv_path: str, model_dir: str, seed: int
     return ens
 
 
-def score_transactions(
-    spark: SparkSession,
-    tx: DataFrame,
-    model_dir: str | None = None,
-    ensemble: AnomalyEnsemble | None = None,
-) -> DataFrame:
+def score_transactions(spark: SparkSession, tx: DataFrame, ensemble: AnomalyEnsemble) -> DataFrame:
     """§3.1/§3.3: the POST /score(/batch) plan on a static DataFrame —
     reject, enrich, model-score, fuse, bucket. Rows the reference's
     validators reject (P4/P5, app.py:69-79: negative amounts,
     non-numeric ids) are dropped by the stream's predicate
-    (``split_valid_invalid``) before scoring. Loads the bundle when an
-    in-memory ensemble isn't supplied (S6)."""
-    if ensemble is None:
-        if model_dir is None:
-            raise ValueError("need model_dir or ensemble")
-        ensemble = AnomalyEnsemble.load(spark, model_dir)
+    (``split_valid_invalid``) before scoring. A saved bundle is loaded
+    with ``AnomalyEnsemble.load`` (S6)."""
     valid, _ = split_valid_invalid(tx)
     features = prepare_transaction_features(valid)
     return ensemble.transform(features, id_col="transaction_id")

@@ -1018,23 +1018,20 @@ def q_minhash_band_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_neardup_replay",
-    # SAME oracle as minhash_band_pairs_md5 — by design: the streaming
-    # band index replayed over the static corpus must reproduce the
-    # batch banding construction bit-exactly, which simultaneously
+    # SAME oracle as minhash_band_pairs_md5 — by design: the bucket
+    # replay over the static corpus must reproduce the batch banding
+    # construction bit-exactly, which simultaneously
     # proves the PYTHON sig kernel (streaming/neardup.py minhash_sigs,
     # pure hashlib) computes the identical md5 signature family as the
     # Spark column expression AND DuckDB SQL.
     oracle=_MINHASH_BAND_SQL,
-    description="Streaming near-dup band index, batch-replay form "
-    "(VERDICT r9 task 5): the SAME bucket-replay kernel the stateful "
-    "streaming operator uses (streaming/neardup.py replay_bucket — "
-    "per band-bucket capped doc_id state, collisions emitted as docs "
-    "arrive) applied per band group via applyInPandas, aggregated to "
-    "(id_a, id_b, n_shared_bands). Stream==batch parity is pinned in "
-    "tests/test_streaming_v2.py with a real applyInPandasWithState "
-    "run; bounded per-bucket state (cap + overflow counter) is the "
-    "KMV/MG discipline. One shuffle on the band key; pair work is "
-    "bucket-local and cap-bounded, never all-pairs.",
+    description="Near-dup band index, batch-replay form "
+    "(VERDICT r9 task 5): the bucket-replay kernel "
+    "(streaming/neardup.py replay_bucket — per band-bucket capped "
+    "doc_id list, collisions emitted as docs arrive) applied per band "
+    "group, aggregated to (id_a, id_b, n_shared_bands). Bounded "
+    "per-bucket work (cap + overflow counter). One shuffle on the band "
+    "key; pair work is bucket-local and cap-bounded, never all-pairs.",
     tags=["dedup", "minhash", "streaming", "oracle-surrogate"],
 )
 def q_stream_neardup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1480,15 +1477,13 @@ def q_ann_simhash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_rapid_repeats",
-    # Batch twin of the streaming rapid-repeat suppressor
+    # Rapid-repeat suppressor, batch form
     # (dropDuplicatesWithinWatermark's time-tolerance idea, made
     # window-deterministic): an event is a "rapid repeat" if it lands
     # within 5 seconds of the PREVIOUS event of the same
     # (user, event_type) — the double-fire / retry signature. Lag
     # comparison in integer micros per high-cardinality key; the
-    # per-type keep ledger is the driver-visible evidence for the
-    # rows-only streaming dedup path (tests/test_streaming.py
-    # test_dedup_stream_exactly_once).
+    # per-type keep ledger is the driver-visible evidence.
     oracle="""
         WITH e AS (
             SELECT event_type, user_id, epoch_us(ts) AS us FROM events
@@ -1799,7 +1794,7 @@ def q_decontam_shared_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the stateless broadcast winnow-fingerprint check every arriving "
     "training doc gets against the FIXED benchmark suite "
     "(streaming/decontam.py — the inverse of the near-dup index's "
-    "growing state). Candidate gate, not a span measure: recall is "
+    "growing reference set). Candidate gate, not a span measure: recall is "
     "guaranteed for spans >= n+w-1 by the winnowing bound; flagged "
     "docs route to decontam_shared_span's exact alignment. Zero "
     "shuffle, zero state — embarrassingly parallel map work.",

@@ -1,9 +1,9 @@
 """Streaming decontamination gate: flag arriving training documents
 whose winnowed fingerprints collide with a STATIC benchmark set — the
 streaming companion to the batch ``decontam_shared_span`` query and
-the inverse of ``streaming/neardup.py``'s corpus-so-far state:
+the inverse of ``streaming/neardup.py``'s corpus-so-far index:
 
-  * near-dup index: the REFERENCE SET GROWS (state), each doc joins
+  * near-dup index: the REFERENCE SET GROWS, each doc joins
     against everything seen before it;
   * decontam gate: the reference set is FIXED (the benchmark suite),
     so the right shape is STATELESS — the benchmark fingerprint set

@@ -1,9 +1,8 @@
-"""Streaming MinHash near-dup band index: the LSH banding structure of
-the batch ``minhash_band_pairs_md5`` query held in stream state, so
-each arriving document is checked against the corpus-so-far and the
-band collisions (near-dup candidate pairs) are emitted incrementally —
-the highest-value LLM-pipeline streaming operator (VERDICT r9 gap #3:
-"new doc vs corpus-so-far" dedup).
+"""MinHash near-dup band collisions, replayed bucket by bucket: the
+LSH banding structure of the batch ``minhash_band_pairs_md5`` query,
+computed by a Python signature kernel and one bounded per-bucket replay
+(``replay_bucket``). The registry query ``stream_neardup_replay``
+checks it against the DuckDB oracle.
 
 Hash math is BIT-IDENTICAL to the batch/DuckDB md5 family
 (queries.py ``_md5_minhash_sigs`` / ``_MINHASH_SIG_SQL``):
@@ -13,31 +12,18 @@ Hash math is BIT-IDENTICAL to the batch/DuckDB md5 family
   sig_i    = min over shingles of int(md5(sh || ':' || i)[:8 hex], 16)
   bands    = 4 bands of 4 sigs; band_key = '-'-joined decimal sigs
 
-so the streaming index's candidate pairs replayed over a static corpus
-equal the batch banding query EXACTLY (pinned in tests, same pattern
-as streaming/bottomk.py pins KMV).
+so the replayed candidate pairs equal the batch banding query EXACTLY.
 
-Bounded state by construction (the MG / HLL / KMV / conformal
-discipline): the state per (band_idx, band_key) group is the doc_id
-list CAPPED at ``cap`` entries plus an overflow counter. A document
-arriving at a full bucket still emits collisions against every stored
-member (precision is never lost) but is not stored — a hot bucket
-loses RECALL for pairs among its overflow docs, honestly counted in
-``n_overflow``. At the default cap this binds only on degenerate
+Bounded work by construction: each (band_idx, band_key) bucket keeps
+a doc_id list CAPPED at ``cap`` entries plus an overflow counter. A
+document arriving at a full bucket still emits collisions against
+every stored member (precision is never lost) but is not stored — a
+hot bucket loses RECALL for pairs among its overflow docs, honestly
+counted as overflow. At the default cap this binds only on degenerate
 buckets (e.g. millions of empty documents sharing the fallback
 shingle), which is exactly where O(bucket²) pair emission must be
-bounded anyway at 100 TB.
-
-Replay safety: a doc_id already STORED in the bucket is a redelivery —
-no emissions, no state change — so at-least-once delivery cannot
-duplicate pairs among stored members (per bucket, such a pair is
-emitted at most once, when its later member first arrives). The one
-honest exception follows from bounded state: an OVERFLOW doc (arrived
-at a full bucket, emitted its collisions, was not stored) that is
-redelivered re-emits those collisions — the state cannot dedup what it
-chose not to remember. Downstream pair consumers therefore treat the
-emission stream as a set (distinct on (id_a, id_b, band_idx)), which
-the batch-replay aggregation does anyway.
+bounded anyway at 100 TB. A doc_id already stored in the bucket emits
+nothing, so a repeated id cannot duplicate pairs among stored members.
 """
 
 from __future__ import annotations
@@ -48,7 +34,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 N_SIGS = 16
 N_BANDS = 4
@@ -69,7 +54,6 @@ def _trim(text: str) -> str:
     return text.strip(" ")
 
 _BAND_SCHEMA = "doc_id long, band_idx int, band_key string"
-_STATE_SCHEMA = "ids array<long>, n_overflow long"
 _OUT_SCHEMA = "id_a long, id_b long, band_idx int"
 
 
@@ -111,8 +95,7 @@ def explode_bands(
     n_bands: int = N_BANDS,
     rows: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """(doc_id, band_idx, band_key) rows via one Arrow stage — works on
-    batch AND streaming frames (mapInPandas supports both). NULL text
+    """(doc_id, band_idx, band_key) rows via one Arrow stage. NULL text
     rows are dropped (the batch query's md5(NULL)-is-NULL behavior)."""
 
     from ..operators.partitioning import spread_narrow
@@ -129,8 +112,7 @@ def explode_bands(
                     bkey.append(k)
             yield pd.DataFrame({"doc_id": ids, "band_idx": bidx, "band_key": bkey})
 
-    # spread_narrow passes streaming frames through untouched; for a
-    # batch frame it widens the one-file parquet scan so the md5 sig
+    # spread_narrow widens the one-file parquet scan so the md5 sig
     # kernel runs on every core.
     return spread_narrow(df.select(F.col(id_col), F.col(text_col))).mapInPandas(
         gen, schema=_BAND_SCHEMA
@@ -140,17 +122,17 @@ def explode_bands(
 def replay_bucket(
     stored: list[int], arriving: list[int], cap: int
 ) -> tuple[list[tuple[int, int]], list[int], int]:
-    """Pure bucket replay — the SINGLE collision kernel shared by the
-    streaming state update and the batch-replay query, so parity is by
-    construction. ``arriving`` must be in deterministic arrival order;
-    returns (emitted pairs, new stored list, overflow increment)."""
+    """Pure bucket replay — the collision kernel of
+    ``batch_band_collisions``. ``arriving`` must be in deterministic
+    arrival order; returns (emitted pairs, new stored list, overflow
+    increment)."""
     stored = list(stored)
     sset = set(stored)
     pairs: list[tuple[int, int]] = []
     overflow = 0
     for d in arriving:
         if d in sset:
-            continue  # redelivery: already indexed, nothing to emit
+            continue  # already indexed, nothing to emit
         for m in stored:
             pairs.append((d, m) if d < m else (m, d))
         if len(stored) < cap:
@@ -161,51 +143,6 @@ def replay_bucket(
     return pairs, stored, overflow
 
 
-def stateful_band_collisions(
-    stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cap: int = DEFAULT_CAP,
-    n_bands: int = N_BANDS,
-    rows: int = ROWS_PER_BAND,
-) -> DataFrame:
-    """Streaming near-dup index: per band-bucket capped doc_id state;
-    each micro-batch emits the new band-collision pairs (id_a, id_b,
-    band_idx). Downstream, grouping by pair and counting distinct
-    band_idx reproduces the batch query's n_shared_bands."""
-    bands = explode_bands(stream, id_col, text_col, n_bands, rows)
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stored, n_over = list(state.get[0]), int(state.get[1])
-        else:
-            stored, n_over = [], 0
-        arriving: list[int] = []
-        for pdf in pdfs:
-            arriving.extend(int(x) for x in pdf["doc_id"])
-        arriving.sort()  # deterministic order within the micro-batch
-        pairs, stored, over_inc = replay_bucket(stored, arriving, cap)
-        state.update((stored, n_over + over_inc))
-        if pairs:
-            yield pd.DataFrame(
-                {
-                    "id_a": [p[0] for p in pairs],
-                    "id_b": [p[1] for p in pairs],
-                    "band_idx": [int(key[0])] * len(pairs),
-                }
-            )
-
-    return bands.groupBy("band_idx", "band_key").applyInPandasWithState(
-        update,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def batch_band_collisions(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -214,10 +151,9 @@ def batch_band_collisions(
     n_bands: int = N_BANDS,
     rows: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """Batch replay of the SAME kernel: every bucket replayed from
-    empty state with docs in doc_id order — equals the full-corpus
-    streamed emission set, and (cap permitting) the batch banding
-    query. One shuffle on the band key; pair work is bucket-local and
+    """Every bucket replayed through ``replay_bucket`` from empty
+    state with docs in doc_id order — equals (cap permitting) the
+    batch banding query. One shuffle on the band key; pair work is bucket-local and
     cap-bounded, never all-pairs.
 
     Singleton buckets are dropped JVM-side BEFORE the Python stage: a

@@ -9,18 +9,16 @@ is ONE declarative plan applied to a stream:
     join (J1/J2) -> rule/fusion/risk columns (F7-F13) -> foreachBatch
     sink (S4)
 
-plus ``stateful_user_profiles`` — ``applyInPandasWithState`` keeping
-per-user running (sum, count): the incremental form of the 90-day
-profile, O(keys) state, no recomputation per batch.
+The profiles are the 90-day ``customer_profile``/``merchant_profile``
+frames (``operators/profiles.py``), joined as static sides; the stream
+keeps no operator state of its own.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Tuple
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.scoring import (
     deviation_ratio,
@@ -39,8 +37,10 @@ def split_valid_invalid(tx: DataFrame) -> Tuple[DataFrame, DataFrame]:
     (app.py:69-79) and isolates per-record errors (app.py:272-280).
     Engine form: the rules are one ordered, null-safe list; a row's
     ``error`` is its first broken rule, valid rows are those with no
-    error, and invalid rows flow to a rejects sink instead of raising.
-    Every input row lands on exactly one side."""
+    error, and invalid rows come back as the second frame, each with its
+    ``error``, instead of raising. Every input row lands on exactly one
+    side. The batch scoring path (``score_transactions``) and the stream
+    both drop the invalid side; no rejects sink exists yet."""
     rules = (
         ("invalid_amount", F.col("amount").isNull() | (F.col("amount") < 0)),
         (
@@ -73,7 +73,7 @@ def build_scoring_stream(
     """
     tf = time_features(F.try_to_timestamp("timestamp"))
     enriched = with_profiles(
-        tx_stream.withColumn("ts", F.try_to_timestamp("timestamp")).withColumn("hour", tf["hour"]),
+        tx_stream.withColumn("hour", tf["hour"]),
         cust_profile,
         merch_profile,
     )
@@ -104,50 +104,4 @@ def build_scoring_stream(
         "aggregated_score",
         "risk_level",
         "model_version",
-    )
-
-
-# applyInPandasWithState output/state schemas (module-level so the
-# closure stays self-contained — workers never import this package).
-_PROFILE_STATE_SCHEMA = "total double, cnt long"
-_PROFILE_OUT_SCHEMA = (
-    "customer_id string, cust_avg_amount double, cust_txn_count long"
-)
-
-
-def stateful_user_profiles(tx_stream: DataFrame) -> DataFrame:
-    """W3 incremental form: per-key running (sum, count) kept in the
-    state store via applyInPandasWithState — O(keys) state, each event
-    processed once. Emits the updated profile per key per batch.
-
-    The reference recomputes profiles per request with a 90-day SQL
-    scan (app.py:121-135); this is the engine-native incremental
-    replacement. (Running totals here match the reference's all-history
-    fallback when no anchor is given; there is no time-based eviction
-    of >90d contributions.)
-    """
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        total, cnt = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            amounts = pd.to_numeric(pdf["amount"], errors="coerce").fillna(0.0)
-            total += float(amounts.sum())
-            cnt += int(len(pdf))
-        state.update((total, cnt))
-        yield pd.DataFrame(
-            {
-                "customer_id": [key[0]],
-                "cust_avg_amount": [total / cnt if cnt else 0.0],
-                "cust_txn_count": [cnt],
-            }
-        )
-
-    return tx_stream.groupBy("customer_id").applyInPandasWithState(
-        update,
-        outputStructType=_PROFILE_OUT_SCHEMA,
-        stateStructType=_PROFILE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -105,7 +105,9 @@ def test_train_score_end_to_end(spark, tx_csv, trained):
     assert len(big & high) >= N_ANOM * 0.9
 
     # bundle round-trip scores identically on a fresh load (S6/M12)
-    reloaded = score_transactions(spark, tx, model_dir=model_dir)
+    from financial_anomaly_detection_spark.ml.ensemble import AnomalyEnsemble
+
+    reloaded = score_transactions(spark, tx, ensemble=AnomalyEnsemble.load(spark, model_dir))
     a = scored.orderBy("transaction_id").collect()
     b = reloaded.orderBy("transaction_id").collect()
     assert a == b
@@ -296,12 +298,17 @@ def test_every_package_definition_is_named_somewhere():
     named somewhere outside its own body and the ``__init__``
     re-exports, searching the package, tests/, perfbench/, bench.py and
     __spark_entry__.py. Queries registered with ``@register`` are
-    reached through the registry and count as used."""
+    reached through the registry and count as used. A definition under
+    ``streaming/`` or in ``operators/profiles.py`` (the real-time path
+    and its profiles) must be named outside tests/: a stream operator
+    that only its own test runs is not kept."""
     root = pathlib.Path(__file__).resolve().parents[1]
     pkg = root / "financial_anomaly_detection_spark"
-    paths = [*pkg.rglob("*.py"), *(root / "tests").rglob("*.py"), *(root / "perfbench").rglob("*.py")]
+    tests = root / "tests"
+    serving = (pkg / "streaming", pkg / "operators" / "profiles.py")
+    paths = [*pkg.rglob("*.py"), *tests.rglob("*.py"), *(root / "perfbench").rglob("*.py")]
     paths += [root / "bench.py", root / "__spark_entry__.py"]
-    used: dict[str, list[ast.stmt]] = {}
+    used: dict[str, list[tuple[pathlib.Path, ast.stmt]]] = {}
     defs: list[tuple[pathlib.Path, ast.stmt]] = []
     for path in paths:
         tree = ast.parse(path.read_text(), str(path))
@@ -309,20 +316,26 @@ def test_every_package_definition_is_named_somewhere():
             if path.name == "__init__.py" and isinstance(top, ast.ImportFrom):
                 continue  # a re-export is not a use
             for name in _names(top):
-                used.setdefault(name, []).append(top)
+                used.setdefault(name, []).append((path, top))
             if (
                 pkg in path.parents
                 and isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
                 and not any(_is_register(d) for d in top.decorator_list)
             ):
                 defs.append((path, top))
+
+    def counts(path: pathlib.Path, user_path: pathlib.Path) -> bool:
+        in_serving = any(path == s or s in path.parents for s in serving)
+        return not (in_serving and tests in user_path.parents)
+
     dead = [
         f"{path.relative_to(root)}:{top.lineno} {top.name}"
         for path, top in defs
-        if all(user is top for user in used.get(top.name, []))
+        if not any(
+            user is not top and counts(path, user_path) for user_path, user in used.get(top.name, [])
+        )
     ]
     assert not dead, "named nowhere: " + ", ".join(dead)
-
 
 
 def test_one_allocator_tuning_and_one_ml_kernel_udf():

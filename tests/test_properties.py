@@ -329,162 +329,6 @@ def test_ordered_rank_desc_matches_sequential_window(spark, rows):
         assert j[r["id"]]["tot"] == len(rows)
 
 
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=-10_000, max_value=10_000),
-            st.integers(min_value=0, max_value=23),
-        ),
-        min_size=2,
-        max_size=200,
-    )
-)
-def test_corr_quantized_matches_numpy(pairs):
-    """The streaming monitor's exact-integer-moment correlation must
-    agree with numpy's float covariance path to within quantization
-    (1e-6 units + 1 ulp headroom) on ANY integer sample, and be None
-    exactly when a coordinate is constant."""
-    import numpy as np
-
-    from financial_anomaly_detection_spark.streaming.drift import corr_quantized
-
-    xs = np.array([p[0] for p in pairs], dtype=np.int64)
-    ys = np.array([p[1] for p in pairs], dtype=np.int64)
-    m = {
-        "n": len(pairs),
-        "sx": int(xs.sum()), "sy": int(ys.sum()),
-        "sxx": int((xs * xs).sum()), "syy": int((ys * ys).sum()),
-        "sxy": int((xs * ys).sum()),
-    }
-    got = corr_quantized(m)
-    if len(set(xs.tolist())) == 1 or len(set(ys.tolist())) == 1:
-        assert got is None
-        return
-    want = float(np.corrcoef(xs.astype(float), ys.astype(float))[0, 1])
-    assert abs(got / 1e6 - want) < 2e-6
-    assert -1_000_000 <= got <= 1_000_000
-
-
-# --- round-9 primitives: pure-python property checks (no Spark) -----------
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(st.integers(0, 11), min_size=1, max_size=400),
-    st.integers(2, 16),
-)
-def test_streaming_conformal_coverage_and_merge(scores, n_buckets):
-    """The split-conformal guarantee survives bucketing: for ANY score
-    multiset and ANY bucket width, at least ceil(0.9*(n+1)) - 1 ... in
-    fact >= 90% of calibration scores sit at or below threshold_upper
-    (rounding a threshold UP never loses coverage), and splitting the
-    stream in two and merging histograms reproduces the threshold."""
-    from financial_anomaly_detection_spark.streaming.conformal import (
-        bucket_of,
-        conformal_from_counts,
-        merge_counts,
-    )
-
-    lo, hi = 0.0, 12.0
-    counts = [0] * (n_buckets + 1)
-    for s in scores:
-        counts[bucket_of(float(s), lo, hi, n_buckets)] += 1
-    n, rank, tb, upper = conformal_from_counts(counts, lo, hi, 0.1)
-    assert n == len(scores)
-    if rank <= n:
-        covered = sum(1 for s in scores if s <= upper)
-        assert covered >= rank  # the order statistic itself is covered
-        assert covered / n >= 0.9 - 1e-12
-    else:
-        assert upper == float("inf")
-    # merge = elementwise addition reproduces the identical threshold
-    h1, h2 = [0] * (n_buckets + 1), [0] * (n_buckets + 1)
-    for i, s in enumerate(scores):
-        (h1 if i % 2 else h2)[bucket_of(float(s), lo, hi, n_buckets)] += 1
-    assert conformal_from_counts(
-        merge_counts(h1, h2), lo, hi, 0.1
-    ) == (n, rank, tb, upper)
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(st.integers(0, 11), min_size=1, max_size=300),
-    st.sampled_from([0.05, 0.1, 0.15, 0.2, 0.25, 0.01]),
-)
-def test_conformal_rank_exact_for_arbitrary_alpha(scores, alpha):
-    """ADVICE r9: the rank must be ceil((n+1)*(1-alpha)) EXACTLY for any
-    alpha, not just multiples of 0.1 — alpha=0.15 silently under-covered
-    and alpha=0.05 produced rank n+1 at n=100 under the old /10 grid."""
-    import math
-
-    from financial_anomaly_detection_spark.streaming.conformal import (
-        bucket_of,
-        conformal_from_counts,
-    )
-
-    lo, hi, n_buckets = 0.0, 12.0, 12
-    counts = [0] * (n_buckets + 1)
-    for s in scores:
-        counts[bucket_of(float(s), lo, hi, n_buckets)] += 1
-    n, rank, tb, upper = conformal_from_counts(counts, lo, hi, alpha)
-    assert rank == math.ceil((n + 1) * (1 - alpha) - 1e-9)
-    if rank <= n:
-        covered = sum(1 for s in scores if s <= upper)
-        assert covered >= rank
-        assert covered / n >= (1 - alpha) - 1e-12
-    else:
-        assert upper == float("inf")
-
-
-def test_conformal_rank_regression_values():
-    """The two concrete mis-rankings named in ADVICE r9, pinned."""
-    from financial_anomaly_detection_spark.streaming.conformal import (
-        conformal_from_counts,
-    )
-
-    # n=100 in one cell; alpha=0.15 -> rank ceil(101*0.85)=86 (was 81)
-    counts = [100] + [0] * 12
-    assert conformal_from_counts(counts, 0.0, 12.0, 0.15)[1] == 86
-    # alpha=0.05 -> rank ceil(101*0.95)=96 (was n+1=101 -> +inf forever)
-    n, rank, tb, upper = conformal_from_counts(counts, 0.0, 12.0, 0.05)
-    assert rank == 96 and upper != float("inf")
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.floats(0.0, 12.0, allow_nan=False), st.integers(2, 64))
-def test_bucket_of_matches_vectorized_clip(score, n_buckets):
-    """ADVICE r9: the scalar bucket_of must agree with the np.clip'd
-    vectorized path in stateful_conformal_threshold at the top edge."""
-    import numpy as np
-
-    from financial_anomaly_detection_spark.streaming.conformal import bucket_of
-
-    lo, hi = 0.0, 12.0
-    s = np.array([score])
-    vec = int(
-        np.where(
-            s >= hi,
-            n_buckets,
-            np.clip(
-                ((s - lo) * n_buckets / (hi - lo)).astype("int64"),
-                0,
-                n_buckets - 1,
-            ),
-        )[0]
-    )
-    assert bucket_of(score, lo, hi, n_buckets) == vec
-
-
-def test_kmv_estimate_zero_hash_guard():
-    """ADVICE r9: a bottom-k state whose k-th smallest hash is 0 must
-    not raise ZeroDivisionError inside the streaming update."""
-    from financial_anomaly_detection_spark.streaming.bottomk import kmv_estimate
-
-    assert kmv_estimate([0], k=1) == 1
-    assert kmv_estimate([0, 5], k=1) == 2
-
-
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(st.integers(0, 50), min_size=1, max_size=60),

@@ -206,56 +206,6 @@ def test_ngram_jaccard_broadcast_valve(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
-def test_skewed_profile_salting_bounds_hot_key(spark):
-    """Skew drill (SCALING.md): on a fixture where ONE user owns 20% of
-    all events, the salted two-phase profile aggregation must (a)
-    reproduce the plain groupBy bit-exactly and (b) bound every
-    phase-1 reduce group far below the hot key's total — the
-    deterministic form of "the hot key no longer runs through one
-    task". SCALING.md records the wall-clock companion."""
-    from financial_anomaly_detection_spark.operators.profiles import salted_group_stats
-
-    n_rows, n_salt = 100_000, 32
-    ev = spark.range(n_rows).select(
-        F.col("id").alias("event_id"),
-        F.when(F.col("id") % 5 == 0, F.lit("hot"))
-        .otherwise(F.concat(F.lit("u"), (F.col("id") % 997).cast("string")))
-        .alias("user_id"),
-        ((F.col("id") % 10_000) / F.lit(100.0)).alias("value"),
-    )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    plain = {
-        r["user_id"]: (r["sum_cents"], r["n_events"])
-        for r in ev.groupBy("user_id")
-        .agg(F.sum(cents).alias("sum_cents"), F.count(F.lit(1)).cast("long").alias("n_events"))
-        .collect()
-    }
-    salted = {
-        r["user_id"]: (r["sum_cents"], r["n_events"])
-        for r in salted_group_stats(
-            ev, "user_id", "value", n_salt=n_salt, salt_src="event_id"
-        ).collect()
-    }
-    assert salted == plain
-    assert plain["hot"][1] == n_rows // 5
-
-    # phase-1 group bound: xxhash64 spreads the hot key's rows across
-    # salts; no group may exceed 2x the uniform share (deterministic
-    # for fixed data + hash)
-    max_group = (
-        ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salt)))
-        .groupBy("user_id", "_salt")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    hot_rows = n_rows // 5
-    assert max_group <= 2 * hot_rows // n_salt, (
-        f"salted group {max_group} exceeds 2x uniform share "
-        f"{hot_rows // n_salt}"
-    )
-
-
 def test_orc_roundtrip_events(spark, sf_dir, tmp_path):
     """parquet -> ORC -> read must be value-identical for every events
     column (ORC stores micro-second timestamps, the same resolution
