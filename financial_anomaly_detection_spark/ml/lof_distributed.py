@@ -140,61 +140,6 @@ def pairwise_quantile_cutoff(X: np.ndarray, n_total: int, target_fanout: float) 
     return float(np.quantile(offdiag, min(1.0, target / (n_total - 1))))
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_neighbors: int = 20,
-    bucket_length: float | str = "auto",
-    num_hash_tables: int = 4,
-    max_distance: float | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Candidate neighbor pairs (a, b, _d) from bucket-local LSH joins.
-
-    ``max_distance=None`` estimates a cutoff from a bounded sample
-    (see ``estimate_distance_cutoff``) instead of the old unbounded
-    default, so bucket occupancy is no longer the only fan-out bound;
-    ``bucket_length="auto"`` (default) additionally scales the bucket
-    COUNT with the corpus so occupancy itself stays constant (see
-    :func:`auto_bucket_length`). The sample is collected once and
-    shared by both estimators.
-    """
-    pts = df.select(
-        F.col(id_col).alias("_id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v"),
-    )
-    if max_distance is None or bucket_length == "auto":
-        X = _collect_sample(df, vec_col)
-        n_total = df.count()
-        if max_distance is None:
-            max_distance = estimate_distance_cutoff(
-                df, vec_col=vec_col, n_neighbors=n_neighbors,
-                n_total=n_total, seed=seed, X=X,
-            )
-        if bucket_length == "auto":
-            bucket_length = auto_bucket_length(X, n_total)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_v",
-        outputCol="_h",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    model = lsh.fit(pts)
-    # pre-hash once; approxSimilarityJoin reuses the existing hash column
-    hashed = model.transform(pts).localCheckpoint(eager=True)
-    return (
-        model.approxSimilarityJoin(hashed, hashed, max_distance, distCol="_d")
-        .select(
-            F.col("datasetA._id").alias("a"),
-            F.col("datasetB._id").alias("b"),
-            "_d",
-        )
-        .filter(F.col("a") != F.col("b"))
-    )
-
-
 def distributed_lof(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -234,8 +179,7 @@ def distributed_lof(
     # they're only needed by the estimators below — a caller pinning
     # max_distance, a float bucket_length AND escalate_distance (e.g.
     # a production job re-using radii tuned on yesterday's corpus)
-    # triggers neither, mirroring lsh_candidate_pairs' conditional
-    # collection.
+    # triggers neither.
     _est: dict = {}
 
     def _sample():

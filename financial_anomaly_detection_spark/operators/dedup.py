@@ -1,9 +1,7 @@
 """Deduplication operators (north-star extension, SURVEY.md §2.10).
 
-Four tiers, from exact to fuzzy, all shaped for 100 TB:
+Three tiers, from exact to fuzzy, all shaped for 100 TB:
 
-  * ``exact_dedup`` — hash-groupBy on a 16-byte content digest: one
-    shuffle keyed by the digest, never by the document body.
   * ``ngram_jaccard_pairs`` — exact near-dup pairs via shingle
     explode + self-join; the *oracle-checkable* ground truth the
     approximate tiers are validated against. Quadratic in the worst
@@ -55,16 +53,6 @@ def shingles_col(text_col: str = "text", n: int = 3):
     return F.when(k >= 1, F.array_distinct(grams)).otherwise(
         F.array(F.trim(F.col(text_col)))
     )
-
-
-def exact_dedup(
-    df: DataFrame, content_cols: list[str], id_col: str, keep: str = "min"
-) -> DataFrame:
-    """Exact dedup keeping one row per content group (§2.10 tier 1)."""
-    digest = F.md5(F.concat_ws("\x00", *content_cols))
-    order = F.col(id_col).asc() if keep == "min" else F.col(id_col).desc()
-    w = Window.partitionBy(digest).orderBy(order)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def duplicate_chunks(

@@ -19,10 +19,7 @@ selection"):
   * ``lsh_topk`` — BucketedRandomProjectionLSH. EXPLICIT OPT-IN, not
     a default: on structure-free vectors it loses to plain exact
     through ×30; on its home fixture (strongly clustered corpora) it
-    beats exact and simhash but merely ties IVF — so no auto route
-    ever selects it.
-
-``ann_topk`` is the front door that encodes the routing above.
+    beats exact and simhash but merely ties IVF.
 
 On normalized vectors euclidean-NN order == cosine-NN order
 (‖a−b‖² = 2 − 2·cos), which is why the LSH tier normalizes first.
@@ -100,9 +97,9 @@ def _train_sample_matrix(
 def _fit_subspaces(d: int, m: int) -> int:
     """Largest subspace count <= ``m`` that divides ``d``.
 
-    PQ requires d %% m == 0 (FAISS asserts); the auto route
-    (ann_topk -> ivfpq) must not hard-fail on, say, 20-dim embeddings
-    with the default m=8, so the tier degrades deterministically to
+    PQ requires d %% m == 0 (FAISS asserts); ``ivf_pq_topk`` must not
+    hard-fail on, say, 20-dim embeddings with the default m=8, so the
+    tier degrades deterministically to
     the nearest valid m (20 -> 5; worst case 1 = a single full-width
     codebook, i.e. plain vector quantization) instead of crashing."""
     return max(j for j in range(1, m + 1) if d % j == 0)
@@ -529,61 +526,6 @@ def simhash_vector_topk(
         .filter(F.col("rn") <= k)
         .select("query_id", "neighbor_id", "cosine", "rn")
     )
-
-
-# Below this corpus size the broadcast-NLJ exact tier beats every
-# approximate tier's setup + shuffle cost on local[32] (SCALING.md:
-# exact 6.7 s at x30 = 150k vectors while BRP-LSH took 134 s; the
-# clustered fixture flips at ~60k x 500-query workloads). 200k is the
-# conservative crossover for the default route.
-ANN_EXACT_THRESHOLD = 200_000
-
-
-def ann_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    tier: str = "auto",
-    exact_threshold: int = ANN_EXACT_THRESHOLD,
-    **tier_kwargs,
-) -> DataFrame:
-    """Front door for ANN top-k: routes to the measured-best tier.
-
-    ``tier="auto"`` (default) picks:
-      * ``exact`` when the corpus is under ``exact_threshold`` rows
-        (one count-star, parquet-metadata fast) — the JVM-codegen
-        brute-force NLJ is measured faster than every approximate
-        tier's setup cost at this size;
-      * ``ivfpq`` otherwise (since r6) — IVFADC beats BOTH of its
-        parents at every drilled scale (×1/×3/×10: 8.8/4.0/6.0 s vs
-        IVF-flat 13.5/4.9/7.6 s and flat-PQ 22.6/7.2/12.4 s), and its
-        advantage structurally widens with n: the probe join shuffles
-        m code bytes per candidate instead of d doubles.
-
-    ``tier`` may name any tier explicitly: ``exact`` | ``ivf``
-    (IVF-flat — exact distances inside probed cells, no quantization
-    loss beyond routing; the former default) | ``ivfpq`` | ``simhash``
-    (wins on structure-free corpora at large ×, flat 6.7 s at ×30) |
-    ``lsh`` (BRP-LSH — OPT-IN ONLY: loses to exact through ×30 on
-    structure-free vectors and merely ties IVF on its clustered home
-    fixture, so no auto route selects it; kept for parity with
-    MLlib-based pipelines that already tuned it).
-    Extra ``tier_kwargs`` pass through to the chosen tier.
-    """
-    if tier == "auto":
-        tier = "exact" if candidates.count() <= exact_threshold else "ivfpq"
-    fns = {
-        "exact": brute_force_topk,
-        "ivf": ivf_topk,
-        "ivfpq": ivf_pq_topk,
-        "simhash": simhash_vector_topk,
-        "lsh": lsh_topk,
-    }
-    if tier not in fns:
-        raise ValueError(f"unknown ANN tier {tier!r}; one of {sorted(fns)}")
-    return fns[tier](candidates, queries, id_col, vec_col, k=k, **tier_kwargs)
 
 
 def semdedup(

@@ -119,31 +119,6 @@ def chunk_text(
     )
 
 
-# PII patterns for the scrubbing stage. Deliberately simple regexes —
-# the operator's contract is the distributed shape + redaction counts.
-PII_PATTERNS: dict[str, str] = {
-    "EMAIL": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "PHONE": r"\+?[0-9][0-9()\-\s]{6,}[0-9]",
-    "URL": r"https?://[^\s]+",
-}
-
-
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """PII scrubbing (training-data pipeline stage): emails/phones/URLs
-    replaced with typed placeholders, with per-kind redaction counts so
-    downstream filters can drop PII-dense documents. Pure
-    regexp_replace/regexp_count — stays in codegen."""
-    out = df
-    scrubbed = F.col(text_col)
-    for kind, pat in PII_PATTERNS.items():
-        out = out.withColumn(
-            f"n_{kind.lower()}_redacted",
-            F.regexp_count(scrubbed, F.lit(pat)).cast("long"),
-        )
-        scrubbed = F.regexp_replace(scrubbed, pat, f"<{kind}>")
-    return out.withColumn(f"{text_col}_scrubbed", scrubbed)
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -392,8 +392,8 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LSH over L2-normalized embeddings. DEMOTED to explicit opt-in (r5): "
     "measured slower than the exact tier through x30 on structure-free "
     "vectors and merely tied with IVF on its clustered home fixture "
-    "(SCALING.md 'ANN tier selection') — ann_topk's auto route picks "
-    "exact/IVF, never this. Registered for parity with MLlib-tuned "
+    "(SCALING.md 'ANN tier selection'), so the exact and IVF tiers are "
+    "the defaults, never this. Registered for parity with MLlib-tuned "
     "pipelines; recall vs the exact tier asserted in tests.",
     tags=["similarity", "lsh", "vector"],
 )

@@ -115,8 +115,8 @@ def q_chunk_text_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="PII scrubbing (training-data pipeline stage): email/URL "
     "redaction with typed placeholders + per-kind counts, pure "
-    "regexp_replace/regexp_count in codegen. (Phone pattern exercised in "
-    "unit tests; the synthetic corpus contains none.)",
+    "regexp_replace/regexp_count in codegen. (No phone pattern: the "
+    "synthetic corpus contains none.)",
     tags=["text", "pii"],
 )
 def q_pii_scrub_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

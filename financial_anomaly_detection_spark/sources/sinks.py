@@ -14,8 +14,8 @@ The reference persists one row per scored transaction into MySQL
     directory, so the replay replaces the first write instead of adding
     to it.
 
-JDBC is code-path-complete but exercised only when a JDBC URL is
-supplied (no database ships in the test container).
+``tests/test_storage.py`` runs the JDBC pair against embedded Derby,
+whose jars ship on Spark's own classpath.
 """
 
 from __future__ import annotations

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from financial_anomaly_detection_spark.operators.dedup import (
-    exact_dedup,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
@@ -57,14 +56,6 @@ def test_simhash_flags_planted_near_dups(docs, exact_pairs):
     if strong:
         recall = len(strong & sim_pairs) / len(strong)
         assert recall >= 0.8, f"simhash missed strong dups: {strong - sim_pairs}"
-
-
-def test_exact_dedup_keeps_one_per_group(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other text")], "id long, text string"
-    )
-    out = exact_dedup(df, ["text"], "id").collect()
-    assert {(r["id"], r["text"]) for r in out} == {(1, "same text"), (3, "other text")}
 
 
 def test_lsh_topk_recall_vs_brute_force(spark, sf_dir):
@@ -240,41 +231,6 @@ def test_cms_join_estimate_disjoint_keys_is_zero(spark):
     assert est2[0]["est_join_rows"] >= 30
 
 
-def test_ann_topk_auto_routing_and_lsh_demotion(spark):
-    """auto = exact below the threshold, IVFADC above (r6: measured
-    faster than both parents at every drill scale); LSH is reachable
-    only by name (the tier that lost its default status in r5)."""
-    import numpy as np
-    from financial_anomaly_detection_spark.operators import similarity as sim
-
-    rng = np.random.default_rng(11)
-    rows = [
-        (i, [float(x) for x in v])
-        for i, v in enumerate(rng.normal(0.0, 1.0, size=(300, 8)))
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = emb.filter(F.col("vec_id") % 50 == 0)
-
-    exact = sim.ann_topk(emb, qs, k=5, tier="auto")  # n=300 -> exact
-    expected = sim.brute_force_topk(emb, qs, "vec_id", "embedding", k=5)
-    assert {tuple(r) for r in exact.collect()} == {
-        tuple(r) for r in expected.collect()
-    }
-
-    # force the large-corpus route with a tiny threshold -> IVFADC
-    routed = sim.ann_topk(
-        emb, qs, k=5, tier="auto", exact_threshold=10, nlist=4, nprobe=2
-    )
-    assert routed.count() > 0
-    # IVF-flat stays reachable by name
-    assert sim.ann_topk(emb, qs, k=5, tier="ivf", nlist=4, nprobe=2).count() > 0
-
-    # lsh only by explicit name; unknown tiers rejected
-    assert sim.ann_topk(emb, qs, k=5, tier="lsh", bucket_length=1.0).count() > 0
-    with pytest.raises(ValueError, match="unknown ANN tier"):
-        sim.ann_topk(emb, qs, k=5, tier="bogus")
-
-
 def test_lsh_home_fixture_clustered_recall(spark):
     """BRP-LSH's documented home fixture: strongly clustered vectors.
     Opt-in tier must deliver near-exact recall there (the measured
@@ -392,27 +348,6 @@ def test_chunk_text_reconstructs_documents(spark, sf_dir):
             assert len(ctoks) == r["n_chunk_tokens"]
             toks.extend(ctoks if r["chunk_idx"] == 0 else ctoks[8:])
         assert toks == originals[doc_id], f"doc {doc_id} not reconstructed"
-
-
-def test_scrub_pii_redacts_planted_pii(spark):
-    from financial_anomaly_detection_spark.operators.textops import scrub_pii
-
-    df = spark.createDataFrame(
-        [
-            (1, "contact alice@example.com or +263 77 123 4567 via https://x.io/a now"),
-            (2, "no pii here at all"),
-        ],
-        "id long, text string",
-    )
-    out = {r["id"]: r for r in scrub_pii(df).collect()}
-    s = out[1]["text_scrubbed"]
-    assert "<EMAIL>" in s and "<PHONE>" in s and "<URL>" in s
-    assert "alice@example.com" not in s and "x.io" not in s
-    assert out[1]["n_email_redacted"] == 1
-    assert out[1]["n_phone_redacted"] == 1
-    assert out[1]["n_url_redacted"] == 1
-    assert out[2]["text_scrubbed"] == "no pii here at all"
-    assert out[2]["n_email_redacted"] == 0
 
 
 # --- hot-shingle document-frequency cap (round 4) -------------------------
@@ -736,11 +671,11 @@ def test_semdedup_threshold_one_paths_agree(spark):
 
 
 def test_ann_topk_auto_survives_odd_dims_and_tiny_corpora(spark):
-    """The auto route (-> IVFADC above the exact threshold) must not
-    hard-fail when the embedding dim is not divisible by the default
-    m=8 (m degrades to the largest divisor, 20 -> 5) nor when the
-    corpus is smaller than pq_k (codebooks clamp to the sample size
-    and the probe tables use the fitted width)."""
+    """IVFADC (``ivf_pq_topk``, the scale ANN tier) must not hard-fail
+    when the embedding dim is not divisible by the default m=8 (m
+    degrades to the largest divisor, 20 -> 5) nor when the corpus is
+    smaller than pq_k (codebooks clamp to the sample size and the
+    probe tables use the fitted width)."""
     import numpy as np
 
     from financial_anomaly_detection_spark.operators import similarity as sim
@@ -752,10 +687,7 @@ def test_ann_topk_auto_survives_odd_dims_and_tiny_corpora(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     qs = emb.filter(F.col("vec_id") % 60 == 0)
-    routed = sim.ann_topk(
-        emb, qs, k=5, tier="auto", exact_threshold=10, nlist=4, nprobe=2
-    )
-    got = routed.collect()
+    got = sim.ivf_pq_topk(emb, qs, k=5, nlist=4, nprobe=2).collect()
     assert len(got) > 0
     assert all(r["neighbor_id"] < 300 for r in got)
 

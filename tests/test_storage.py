@@ -131,6 +131,17 @@ def test_jdbc_derby_roundtrip(spark, tmp_path):
     assert part.rdd.getNumPartitions() == 2
     assert part.count() == 3
 
+    # a partitioned read missing a bound is refused by name, not sent
+    # to Spark as the string "None" (a NumberFormatException at load)
+    for missing in ("lower_bound", "upper_bound"):
+        bounds = {"lower_bound": 1001, "upper_bound": 1004}
+        del bounds[missing]
+        with pytest.raises(ValueError, match=f"read_jdbc_table.*{missing}"):
+            read_jdbc_table(
+                spark, url, "anomalies_log", partition_column="transaction_id",
+                properties=props, **bounds,
+            )
+
 
 def _plan_nodes(node):
     """Every node of a physical plan tree (a py4j ``SparkPlan``)."""
@@ -204,170 +215,3 @@ def test_ngram_jaccard_broadcast_valve(spark, sf_dir):
         assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-
-
-def test_orc_roundtrip_events(spark, sf_dir, tmp_path):
-    """parquet -> ORC -> read must be value-identical for every events
-    column (ORC stores micro-second timestamps, the same resolution
-    load_table normalizes to), and the ORC scan must prune columns
-    like parquet does."""
-    from financial_anomaly_detection_spark.sources.readers import (
-        load_table,
-        read_table_orc,
-        write_table_orc,
-    )
-
-    src = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_orc")
-    write_table_orc(src, path)
-    back = read_table_orc(spark, path)
-
-    assert back.count() == src.count()
-    cols = sorted(src.columns)
-    a = [tuple(r) for r in src.select(*cols).orderBy("event_id").collect()]
-    b = [tuple(r) for r in back.select(*cols).orderBy("event_id").collect()]
-    assert a == b
-
-    # column pruning reaches the ORC reader: the scan's ReadSchema
-    # must carry only the projected column
-    explained = (
-        back.select("event_type")._jdf.queryExecution().executedPlan().toString()
-    )
-    scan_lines = [ln for ln in explained.splitlines() if "ReadSchema" in ln]
-    assert scan_lines and all(
-        "event_id" not in ln.split("ReadSchema")[1] for ln in scan_lines
-    )
-
-
-def test_xml_roundtrip_events(spark, sf_dir, tmp_path):
-    """parquet -> XML -> read must be value-identical for the events
-    table (Spark 4 ships the xml format natively). The read uses an
-    explicit schema — single-pass, no inference sampling — and
-    timestamps round-trip through XML's ISO text form."""
-    from financial_anomaly_detection_spark.sources.readers import (
-        load_table,
-        read_table_xml,
-        write_table_xml,
-    )
-
-    src = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_xml")
-    write_table_xml(src, path, row_tag="event")
-    ddl = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-        "event_type STRING, value DOUBLE, props STRING"
-    )
-    back = read_table_xml(spark, path, row_tag="event", schema=ddl)
-
-    assert back.count() == src.count()
-    cols = sorted(src.columns)
-    a = [tuple(r) for r in src.select(*cols).orderBy("event_id").collect()]
-    b = [tuple(r) for r in back.select(*cols).orderBy("event_id").collect()]
-    assert a == b
-
-
-def test_binaryfile_ingest_feeds_codec_decode(spark, tmp_path):
-    """binaryFile is the real multimodal ingestion path: synthesize
-    PNG and WAV assets with the repo's own encoders, ingest the
-    directory, and decode the ingested bytes — content, length, and
-    glob filtering must all be faithful."""
-    import numpy as np
-
-    from financial_anomaly_detection_spark.operators.codecs import (
-        decode_png,
-        decode_wav,
-        encode_png,
-        encode_wav,
-    )
-    from financial_anomaly_detection_spark.sources.readers import read_binary_assets
-
-    rng = np.random.default_rng(42)
-    pngs = {}
-    for i in range(3):
-        img = rng.integers(0, 256, size=(8, 6, 3), dtype=np.uint8)
-        raw = encode_png(img)
-        (tmp_path / f"img_{i}.png").write_bytes(raw)
-        pngs[f"img_{i}.png"] = (raw, img)
-    wav_samples = (rng.normal(0, 0.1, size=64) * 32767).astype(np.int16)
-    wav_raw = encode_wav(wav_samples, sample_rate=8000)
-    (tmp_path / "clip.wav").write_bytes(wav_raw)
-
-    imgs = read_binary_assets(spark, str(tmp_path), pattern="*.png")
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in imgs.collect()}
-    assert set(rows) == set(pngs)
-    for name, (raw, img) in pngs.items():
-        r = rows[name]
-        assert r["length"] == len(raw)
-        assert bytes(r["content"]) == raw
-        assert np.array_equal(decode_png(bytes(r["content"])), img)
-
-    audio = read_binary_assets(spark, str(tmp_path), pattern="*.wav")
-    (a,) = audio.collect()
-    sr, samples = decode_wav(bytes(a["content"]))
-    assert sr == 8000
-    # decode returns (n_samples, n_channels); mono flattens back
-    assert np.array_equal(samples.reshape(-1), wav_samples)
-
-
-def test_avro_reader_availability_gate(spark, tmp_path):
-    """spark-avro is an external module; the container ships without
-    it. The gate must answer honestly, and the reader must fail with
-    the actionable message instead of a raw provider error. If the
-    environment ever gains the module, the same test proves a real
-    round-trip (the JDBC/Derby availability pattern)."""
-    import pytest
-
-    from financial_anomaly_detection_spark.sources.readers import (
-        avro_available,
-        load_table,
-        read_table_avro,
-    )
-
-    if not avro_available(spark):
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            read_table_avro(spark, str(tmp_path / "nothing.avro"))
-        return
-    src = load_table(spark, "/root/testdata/sf0.001", "nation")
-    path = str(tmp_path / "nation_avro")
-    src.write.format("avro").save(path)
-    back = read_table_avro(spark, path)
-    assert back.count() == src.count()
-
-
-def test_text_corpus_reader_lines_and_wholetext(spark, tmp_path):
-    """text-format ingestion: per-line rows for JSONL-adjacent corpora
-    and one-row-per-file wholetext for long documents — and the
-    ingested rows flow straight into a text operator."""
-    from financial_anomaly_detection_spark.operators.textops import (
-        quality_score,
-        token_count,
-    )
-    from financial_anomaly_detection_spark.sources.readers import read_text_corpus
-
-    (tmp_path / "a.txt").write_text("the cat sat\non the mat\n")
-    (tmp_path / "b.txt").write_text("one single document body here\n")
-
-    lines = read_text_corpus(spark, str(tmp_path), pattern="*.txt")
-    got = sorted(r["text"] for r in lines.collect())
-    assert got == sorted(
-        ["the cat sat", "on the mat", "one single document body here"]
-    )
-
-    docs = read_text_corpus(spark, str(tmp_path), whole_files=True)
-    by_file = {
-        r["source_path"].rsplit("/", 1)[-1]: r["text"] for r in docs.collect()
-    }
-    assert by_file["a.txt"] == "the cat sat\non the mat\n"
-    assert by_file["b.txt"] == "one single document body here\n"
-
-    # ingested text feeds the quality operators unchanged
-    q = {
-        r["source_path"].rsplit("/", 1)[-1]: r
-        for r in docs.select(
-            "source_path",
-            token_count("text").alias("tokens"),
-            quality_score("text").alias("quality"),
-        ).collect()
-    }
-    assert q["a.txt"]["tokens"] > 0 and q["b.txt"]["tokens"] > 0
-    assert all(r["quality"] is not None for r in q.values())

@@ -1,7 +1,6 @@
-"""Python DataSource, near-dup replay and decontamination gate tests.
+"""Near-dup replay and decontamination gate tests.
 
-The Python DataSource must be deterministic and partition-parallel;
-the near-dup bucket replay must keep its ordering, dedup and cap
+The near-dup bucket replay must keep its ordering, dedup and cap
 rules; the streaming decontamination gate must agree with its batch
 form.
 """
@@ -9,42 +8,6 @@ form.
 from __future__ import annotations
 
 import json
-
-
-def test_python_datasource_synthetic_transactions(spark):
-    from financial_anomaly_detection_spark.sources.pysource import (
-        SyntheticTransactions,
-        synth_row,
-    )
-    from financial_anomaly_detection_spark.streaming.score_stream import (
-        split_valid_invalid,
-    )
-
-    spark.dataSource.register(SyntheticTransactions)
-    reader = (
-        spark.read.format("fad_synth")
-        .option("rows", 1000)
-        .option("partitions", 8)
-        .option("seed", 7)
-    )
-    df = reader.load()
-    assert df.rdd.getNumPartitions() == 8
-    rows = df.collect()
-    assert len(rows) == 1000
-    # deterministic: a second scan yields identical content
-    again = sorted(tuple(r) for r in reader.load().collect())
-    assert sorted(tuple(r) for r in rows) == again
-    # row content matches the pure-python generator (retry-safety: a
-    # re-executed task regenerates the same rows)
-    by_id = {r["transaction_id"]: tuple(r) for r in rows}
-    assert by_id["0"] == synth_row(7, 0)
-    assert by_id["999"] == synth_row(7, 999)
-
-    # generated data flows through the scoring path: all rows valid by
-    # construction (digit ids, ISO timestamps, non-negative amounts)
-    valid, invalid = split_valid_invalid(df)
-    assert invalid.count() == 0
-    assert valid.count() == 1000
 
 
 # --- MinHash near-dup bucket replay (streaming/neardup.py) --------------
