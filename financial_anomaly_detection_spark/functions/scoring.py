@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 # Reference defaults (python_scoring/app.py:22-24, Dockerfile ENV).
-SCORE_THRESHOLD_HIGH = -0.3
 SCORE_THRESHOLD_MED = -0.1
 AMOUNT_HIGH_RISK = 10000.0
 # Width of the decision-score sigmoid (python_scoring/app.py:189-190).

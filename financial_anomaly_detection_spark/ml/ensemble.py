@@ -73,7 +73,7 @@ class AnomalyEnsemble:
 
     def fit(self, feature_df: DataFrame) -> "AnomalyEnsemble":
         """feature_df must carry the 10 feature columns
-        (schemas.FEATURE_COLS shape)."""
+        (schemas.NUMERIC_FEATURES + schemas.CATEGORICAL_FEATURES)."""
         with self._fit_pinned(feature_df):
             return self
 

@@ -8,11 +8,14 @@ as an MLlib ``Pipeline``. Differences documented in SURVEY.md §2.7:
   * sklearn scales with the biased std (ddof=0), MLlib StandardScaler
     with the sample std (ddof=1). We follow MLlib; parity tests use
     rank checks, not value checks, across this boundary.
-  * ``handle_unknown='ignore'`` (unknown category -> all-zeros vector)
-    is matched by StringIndexer(handleInvalid='keep') feeding
-    OneHotEncoder(handleInvalid='keep', dropLast=True): the unknown
-    bucket is the last index, which dropLast removes, so unknowns
-    encode as the zero vector exactly like sklearn.
+  * sklearn's ``handle_unknown='ignore'`` encodes an unseen category as
+    the zero vector; this pipeline does not. StringIndexer(
+    handleInvalid='keep') indexes the n fitted labels ``frequencyDesc``
+    (ties alphabetical) and gives unseen and null values the index n;
+    OneHotEncoder(handleInvalid='keep', dropLast=True) keeps that slot,
+    so each categorical takes n+1 slots and an unseen or null value sets
+    the last one. Changing this would change every bundle's feature
+    dimension and every score.
   * Only numeric columns are scaled (the ColumnTransformer scales the
     numeric block only): numerics are assembled and scaled first, then
     concatenated with the one-hot vectors.
@@ -44,7 +47,7 @@ def build_feature_pipeline() -> Pipeline:
         inputCols=[f"{c}_idx" for c in CATEGORICAL_FEATURES],
         outputCols=[f"{c}_vec" for c in CATEGORICAL_FEATURES],
         handleInvalid="keep",
-        dropLast=True,  # drops the 'keep' (unknown) slot -> zero vector, sklearn parity
+        dropLast=True,  # n+1 slots per column: unseen/null set the last (sklearn gives zeros)
     )
     num_assembler = VectorAssembler(
         inputCols=NUMERIC_FEATURES, outputCol="_numeric_raw", handleInvalid="keep"

@@ -47,16 +47,6 @@ from .codecs import (
 )
 from .partitioning import spread_narrow
 
-# Typed metadata struct carried alongside every media payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),   # image|audio|video
-        T.StructField("format", T.StringType()),       # png|wav|mp4|...
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("checksum", T.StringType()),     # hex md5 of payload
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

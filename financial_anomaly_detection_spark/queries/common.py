@@ -136,6 +136,19 @@ def register(name: str, oracle: Optional[str], description: str, tags: list[str]
     return deco
 
 
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query once: oracle-backed entries first, then the
+    rows-only ones, each group in registration order, so any prefix
+    holds hash-checkable queries before rows-only ones."""
+    ordered = sorted(REGISTRY.items(), key=lambda item: item[1].oracle is None)
+    return {name: spec.fn for name, spec in ordered}
+
+
+def oracle_sql() -> dict[str, str]:
+    """The oracle-backed entries' DuckDB SQL, in ``queries()`` order."""
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
+
+
 # Exact (unrounded) profile CTE shared by the join queries: decimal sum
 # cast to double divided by count — bit-identical across engines.
 _CUST_PROFILE_CTE = f"""
@@ -786,6 +799,8 @@ __all__ = [
     'QuerySpec',
     'REGISTRY',
     'register',
+    'queries',
+    'oracle_sql',
     '_CUST_PROFILE_CTE',
     '_exact_profile',
     '_Q1_CENTS_SQL',

@@ -5,7 +5,8 @@ The reference persists one row per scored transaction into MySQL
 (python_scoring/app.py:208-230). Engine-native forms:
 
   * batch: ``write_scores_parquet`` / ``write_scores_jdbc`` — bulk
-    appends, partitioned by score date so downstream reads prune.
+    appends; the parquet form is partitioned by ``risk_level``, so a
+    read of one risk bucket prunes the others.
   * streaming: ``foreach_batch_parquet`` — a foreachBatch hook doing
     the same bulk write per micro-batch, exactly-once with a replayable
     source: Spark replays a batch whose write finished but whose

@@ -10,10 +10,11 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from financial_anomaly_detection_spark.ml.ensemble import AnomalyEnsemble
-from financial_anomaly_detection_spark.ml.features import prepare_event_features
+from financial_anomaly_detection_spark.ml.features import build_feature_pipeline, prepare_event_features
 from financial_anomaly_detection_spark.ml.iforest import IsolationForestModel
 from financial_anomaly_detection_spark.ml.lof import LOFNoveltyModel
 from financial_anomaly_detection_spark.ml.reconstruction import ReconstructionScorer
+from financial_anomaly_detection_spark.schemas import CATEGORICAL_FEATURES, NUMERIC_FEATURES
 from financial_anomaly_detection_spark.sources.readers import load_table
 
 N_NORMAL, N_ANOM, DIM = 600, 6, 8
@@ -127,6 +128,45 @@ def test_ensemble_end_to_end_and_roundtrip(spark, sf_dir, tmp_path):
     a = out.orderBy("event_id").collect()
     b = loaded.transform(features).orderBy("event_id").collect()
     assert a == b
+
+
+def test_feature_encoding_keeps_a_last_slot_for_unseen_and_null_categories(spark):
+    """Each categorical encodes to labels+1 slots: known labels in
+    ``frequencyDesc`` order (ties alphabetical), then one slot that an
+    unseen or null value sets. sklearn's ``handle_unknown='ignore'``
+    gives such a value the zero vector instead."""
+    channels = ["pos"] * 5 + ["card"] * 3 + ["mobile_money"] * 2 + ["bank_transfer"] * 2
+    cities = ["Harare", "Gweru", "Mutare", "Bulawayo", "Marondera", "Victoria Falls"] * 2
+    schema = T.StructType(
+        [T.StructField("id", T.LongType())]
+        + [T.StructField(c, T.DoubleType()) for c in NUMERIC_FEATURES]
+        + [T.StructField(c, T.StringType()) for c in CATEGORICAL_FEATURES]
+    )
+
+    def frame(pairs):
+        rows = [
+            (i, float(i), 2024.0, 5.0, float(i % 7), float(i % 24), 10.0 + i, 1.0, 20.0 - i, ch, city)
+            for i, (ch, city) in enumerate(pairs)
+        ]
+        return spark.createDataFrame(rows, schema)
+
+    model = build_feature_pipeline().fit(frame(zip(channels, cities)))
+    channel_labels, city_labels = model.stages[0].labels, model.stages[1].labels
+    assert channel_labels == ["pos", "card", "bank_transfer", "mobile_money"]
+    assert city_labels == sorted(set(cities))
+
+    probe = frame([("card", "Gweru"), ("crypto", "Lusaka"), (None, None)])
+    rows = {r["id"]: r["features"].toArray() for r in model.transform(probe).collect()}
+    n_num, n_ch, n_city = len(NUMERIC_FEATURES), len(channel_labels) + 1, len(city_labels) + 1
+    assert all(len(v) == n_num + n_ch + n_city == 20 for v in rows.values())
+
+    def hot(v):
+        ch, city = v[n_num:n_num + n_ch], v[n_num + n_ch:]
+        return list(np.flatnonzero(ch)), list(np.flatnonzero(city))
+
+    assert hot(rows[0]) == ([channel_labels.index("card")], [city_labels.index("Gweru")])
+    assert hot(rows[1]) == ([n_ch - 1], [n_city - 1])
+    assert hot(rows[2]) == ([n_ch - 1], [n_city - 1])
 
 
 def test_autoencoder_ranks_planted_anomalies(spark):

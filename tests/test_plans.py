@@ -293,18 +293,35 @@ def _names(node: ast.AST) -> Iterator[str]:
             yield n.value
 
 
+def _targets(top: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a function or class, or
+    the targets of ``NAME = ...``, ``A, B = ...`` and ``NAME: T = ...``."""
+    if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [top.name]
+    if isinstance(top, ast.Assign):
+        targets = top.targets
+    elif isinstance(top, ast.AnnAssign):
+        targets = [top.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
 def test_every_package_definition_is_named_somewhere():
-    """No top-level function or class in the package is dead: each is
-    named somewhere outside its own body and the ``__init__``
-    re-exports, searching the package, tests/, perfbench/, bench.py and
-    __spark_entry__.py. Queries registered with ``@register`` are
-    reached through the registry and count as used. A definition under
-    ``streaming/``, ``ml/`` or ``sources/`` or in
-    ``operators/profiles.py`` (the real-time path, the models, the
-    readers and sinks, and the profiles) must be named outside tests/:
-    code that only its own test runs is not kept. The JDBC pair
-    ``read_jdbc_table``/``write_scores_jdbc`` is exempt: it is the
-    engine's form of the reference's MySQL profile reads and
+    """No top-level function, class or assigned name in the package is
+    dead: each is named somewhere outside its own statement and the
+    ``__init__`` re-exports, searching the package, tests/, perfbench/,
+    bench.py and __spark_entry__.py. The strings of an ``__all__`` list
+    are not a use. A use inside a dead definition is not a use either:
+    the check drops those and runs again until nothing more falls, so a
+    whole chain of dead code fails, not only its head. Queries
+    registered with ``@register`` are reached through the registry and
+    count as used. A definition under ``streaming/``, ``ml/`` or
+    ``sources/`` or in ``operators/profiles.py`` (the real-time path,
+    the models, the readers and sinks, and the profiles) must be named
+    outside tests/: code that only its own test runs is not kept. The
+    JDBC pair ``read_jdbc_table``/``write_scores_jdbc`` is exempt: it is
+    the engine's form of the reference's MySQL profile reads and
     ``anomalies_log`` inserts, which no workload runs."""
     root = pathlib.Path(__file__).resolve().parents[1]
     pkg = root / "financial_anomaly_detection_spark"
@@ -314,34 +331,41 @@ def test_every_package_definition_is_named_somewhere():
     paths = [*pkg.rglob("*.py"), *tests.rglob("*.py"), *(root / "perfbench").rglob("*.py")]
     paths += [root / "bench.py", root / "__spark_entry__.py"]
     used: dict[str, list[tuple[pathlib.Path, ast.stmt]]] = {}
-    defs: list[tuple[pathlib.Path, ast.stmt]] = []
+    defs: list[tuple[pathlib.Path, ast.stmt, list[str]]] = []
     for path in paths:
         tree = ast.parse(path.read_text(), str(path))
         for top in tree.body:
             if path.name == "__init__.py" and isinstance(top, ast.ImportFrom):
                 continue  # a re-export is not a use
+            if "__all__" in _targets(top):
+                continue  # an export list is not a use
             for name in _names(top):
                 used.setdefault(name, []).append((path, top))
-            if (
-                pkg in path.parents
-                and isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not any(_is_register(d) for d in top.decorator_list)
-            ):
-                defs.append((path, top))
+            names = [n for n in _targets(top) if not (n.startswith("__") and n.endswith("__"))]
+            if pkg in path.parents and names and not any(_is_register(d) for d in getattr(top, "decorator_list", [])):
+                defs.append((path, top, names))
 
     def counts(path: pathlib.Path, name: str, user_path: pathlib.Path) -> bool:
         is_held = name not in jdbc and any(path == h or h in path.parents for h in held)
         return not (is_held and tests in user_path.parents)
 
-    dead = [
-        f"{path.relative_to(root)}:{top.lineno} {top.name}"
-        for path, top in defs
-        if not any(
-            user is not top and counts(path, top.name, user_path)
-            for user_path, user in used.get(top.name, [])
-        )
-    ]
-    assert not dead, "named nowhere: " + ", ".join(dead)
+    dead: dict[tuple[int, str], str] = {}
+    while True:
+        gone = {id(top) for _, top, names in defs if all((id(top), n) in dead for n in names)}
+        fallen = {
+            (id(top), name): f"{path.relative_to(root)}:{top.lineno} {name}"
+            for path, top, names in defs
+            for name in names
+            if (id(top), name) not in dead
+            and not any(
+                user is not top and id(user) not in gone and counts(path, name, user_path)
+                for user_path, user in used.get(name, [])
+            )
+        }
+        if not fallen:
+            break
+        dead.update(fallen)
+    assert not dead, "named nowhere: " + ", ".join(dead.values())
 
 
 def test_one_allocator_tuning_and_one_ml_kernel_udf():

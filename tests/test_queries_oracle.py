@@ -211,3 +211,19 @@ def test_mahalanobis_flags_correlation_breaking_point(spark, tmp_path):
     assert r["n_events"] == len(hours)
     assert r["n_outliers_p999"] >= 1
     assert r["max_d2"] > 13.81551
+
+
+def test_queries_list_oracle_backed_entries_first_in_registration_order():
+    """``queries()`` names every registered entry once: the oracle-backed
+    ones first, then the rows-only ones, each group in registration
+    order. ``oracle_sql()`` holds exactly the oracle-backed ones, in the
+    same order. No Spark session is needed."""
+    from financial_anomaly_detection_spark.queries import oracle_sql, queries
+
+    names = list(queries())
+    assert len(names) == len(set(names)) and set(names) == set(REGISTRY)
+    assert ORACLE_QUERIES and ROWS_ONLY_QUERIES
+    assert names == ORACLE_QUERIES + ROWS_ONLY_QUERIES != list(REGISTRY)
+    assert all(queries()[n] is REGISTRY[n].fn for n in names)
+    assert list(oracle_sql()) == ORACLE_QUERIES
+    assert all(oracle_sql()[n] == REGISTRY[n].oracle for n in ORACLE_QUERIES)
